@@ -9,6 +9,7 @@ facade composes them into the reference's KVS-method surface.
 - :mod:`.sort`    — ordering family (sort, sort_locally, ranking, limit)
 - :mod:`.join`    — cogroup-join family (match, inner/outer/semi/anti)
 - :mod:`.search`  — point lookup (find_key, take_one)
+- :mod:`.pyworker` — Python-worker start-up fix the Arrow operators call
 """
 
 from kmr_spark.operators import join, mapping, reduce, search, shuffle, sort

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kmr_spark.operators.pyworker import skip_unchanged_zip_rereads
+
 
 def map_pairs(
     df: DataFrame,
@@ -34,9 +36,10 @@ def map_pairs(
     Executes as Arrow-batched ``mapInPandas`` — one Python invocation per
     batch, not per row, so the hot path stays vectorizable.
     """
+    names = [f.split()[0].strip() for f in schema.split(",")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.split()[0].strip() for f in schema.split(",")]
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             out_k, out_v = [], []
             for k, v in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):

@@ -2,22 +2,45 @@
 SURVEY.md §2.5).
 
 KMR's redfn sees *all* values of a key at once (kmr_redfn_t, reference
-src/kmr.h:740-748) — the direct Spark analogue is grouped-map
-``applyInPandas`` (same all-in-memory-per-group caveat). But most real
-aggregations are expressible, and the expressible path gets map-side
-partial aggregation for free (KMR's "reduce without shuffle is a
-combiner" idiom, src/kmrbase.c:2590-2604, is automatic in
+src/kmr.h:740-748). KMR gets there by sorting each rank's pairs and
+calling the redfn once per run of equal keys (kmr_reduce_nothreading,
+src/kmrbase.c:2371-2676); :func:`reduce_pairs` does the same over one
+hash exchange, a sort within partitions and one ``mapInPandas``
+function per partition, so one key's values are in memory at a time.
+But most real aggregations are expressible, and the expressible path
+gets map-side partial aggregation for free (KMR's "reduce without
+shuffle is a combiner" idiom, src/kmrbase.c:2590-2604, is automatic in
 HashAggregateExec).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, DataType, IntegralType
+
+from kmr_spark.operators.pyworker import skip_unchanged_zip_rereads
+
+
+def _null_free(name: str, dtype: DataType) -> tuple[Column, str | None]:
+    """(column with NULLs filled, pandas dtype of a run that had NULLs).
+
+    pandas turns a nullable integral or boolean Arrow column into
+    float64/object only when the column holds a NULL. Filling those
+    NULLs before Arrow (the NULL flag travels beside) keeps a batch's
+    dtype independent of its other keys, and values above 2**53 exact;
+    each run gets back the dtype a one-group Arrow batch would have.
+    """
+    if isinstance(dtype, IntegralType):
+        return F.coalesce(F.col(name), F.lit(0).cast(dtype)), "float64"
+    if isinstance(dtype, BooleanType):
+        return F.coalesce(F.col(name), F.lit(False)), "object"
+    return F.col(name), None
 
 
 def reduce_pairs(
@@ -30,18 +53,76 @@ def reduce_pairs(
     """Arbitrary redfn over the full value array of each key
     (kmr_reduce, src/kmrbase.c:2607-2676).
 
-    Grouped-map applyInPandas: one Arrow batch per key group. Same
-    memory model as KMR (a group must fit in one worker's memory).
+    KMR's sorted-run algorithm (kmr_reduce_nothreading,
+    src/kmrbase.c:2371-2676): one hash exchange on the key, a sort
+    within partitions, then one ``mapInPandas`` function per partition
+    that walks the sorted Arrow batches, detects runs of equal keys
+    (also across batch boundaries) and calls ``fn(key, values)`` once
+    per run. Same memory model as KMR: one key's values (plus the
+    current batch) are in memory at a time. NULL keys form one group.
+    The redfn gets a key and its values typed as pandas types a column
+    holding only that key's rows: a NULL in a long column arrives as
+    NaN and turns that key's values (only) into floats. The output
+    pairs of all runs that end in one input batch leave as one frame.
     """
+    names = [f.split()[0].strip() for f in schema.split(",")][:2]
+    key_col, key_nulls = _null_free(key, df.schema[key].dataType)
+    val_col, val_nulls = _null_free(value, df.schema[value].dataType)
+    runs = df.repartition(key).sortWithinPartitions(key).select(
+        key_col.alias("k"), F.col(key).isNull().alias("k_null"),
+        val_col.alias("v"), F.col(value).isNull().alias("v_null"))
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        names = [f.split()[0].strip() for f in schema.split(",")]
-        k = pdf[key].iloc[0]
-        out = fn(k, list(pdf[value]))
-        return pd.DataFrame(out, columns=names[:2]) if out else pd.DataFrame(
-            {names[0]: [], names[1]: []})
+    def same_key(a: np.ndarray, a_null: np.ndarray,
+                 b: np.ndarray, b_null: np.ndarray) -> np.ndarray:
+        """Elementwise "a and b are one key", as Spark groups: NULL
+        equals only NULL, and NaN equals NaN."""
+        eq = a == b
+        if a.dtype.kind == "f":
+            eq |= np.isnan(a) & np.isnan(b)
+        return np.where(a_null | b_null, a_null & b_null, eq)
 
-    return df.groupBy(key).applyInPandas(run, schema=schema)
+    def as_group(col: pd.Series, nulls: np.ndarray, dtype: str | None) -> pd.Series:
+        if dtype is None or not nulls.any():
+            return col
+        return col.astype(dtype).where(~nulls, None)
+
+    def call(k: Any, pieces: list[tuple[pd.Series, np.ndarray]], out: list) -> None:
+        vals, nulls = pieces[0]
+        if len(pieces) > 1:
+            vals = pd.concat([p for p, _ in pieces])
+            nulls = np.concatenate([n for _, n in pieces])
+        out.extend(fn(k, as_group(vals, nulls, val_nulls).tolist()))
+
+    def reduce_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
+        # the open run: its key, and its values per batch it spans
+        run_key, pieces, last = None, [], None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            kcol, v = pdf["k"], pdf["v"]
+            k, kn, vn = kcol.to_numpy(), pdf["k_null"].to_numpy(), pdf["v_null"].to_numpy()
+            starts = np.flatnonzero(~same_key(k[:-1], kn[:-1], k[1:], kn[1:])) + 1
+            cuts = [0, *starts.tolist(), len(pdf)]
+            out: list = []
+            for lo, hi in zip(cuts, cuts[1:]):
+                if lo or last is None or not same_key(*last, k[:1], kn[:1])[0]:
+                    if pieces:
+                        call(run_key, pieces, out)
+                    run_key = as_group(kcol.iloc[lo:lo + 1], kn[lo:lo + 1],
+                                       key_nulls).iloc[0]
+                    pieces = []
+                pieces.append((v.iloc[lo:hi], vn[lo:hi]))
+            last = (k[-1:], kn[-1:])
+            if out:
+                yield pd.DataFrame(out, columns=names)
+        out = []
+        if pieces:
+            call(run_key, pieces, out)
+        if out:
+            yield pd.DataFrame(out, columns=names)
+
+    return runs.mapInPandas(reduce_runs, schema=schema)
 
 
 def reduce_expr(df: DataFrame, aggs: list[Column], key: str = "key") -> DataFrame:
@@ -125,7 +206,9 @@ def scan_distributed(df: DataFrame, value: str | list[str],
     No single-partition global window anywhere, so this is the form
     that survives 100 TB (scan_on_values stays as the windowed
     parity/debug surface). The measure column must be integral —
-    float prefix sums would be partition-order-dependent.
+    float prefix sums would be partition-order-dependent. NULL measures
+    are skipped, as SQL's ``SUM`` skips them: a NULL row adds 0 to the
+    rows after it, and so does a partition whose measures are all NULL.
 
     The result is materialized before returning (ranking's task-id
     caveat: the offset/pid columns are only the sort's partition index
@@ -149,7 +232,8 @@ def scan_distributed(df: DataFrame, value: str | list[str],
     acc = [0] * len(values)
     for r in sorted(totals, key=lambda r: r["pid"]):
         offsets[r["pid"]] = list(acc)
-        acc = [a + r[v] for a, v in zip(acc, values)]
+        # an all-NULL partition sums to NULL; SUM skips NULLs, so add 0
+        acc = [a + (r[v] or 0) for a, v in zip(acc, values)]
 
     scan_cols = [f"scan_{v}" if len(values) > 1 else "scan"
                  for v in values]
@@ -178,8 +262,8 @@ def scan_max_distributed(df: DataFrame, value: str,
     src/kmrmoreops.c:943). The first row in the global order gets NULL
     (no prior element — max has no integer identity the data can't
     collide with). Same three-phase shape: range-partition sort,
-    collect per-partition maxes (one long each), driver exscan, narrow
-    Arrow pass. Powers watermark-lateness audits: "the largest
+    collect per-partition maxes (one long each), driver exscan, JVM
+    offset projection. Powers watermark-lateness audits: "the largest
     timestamp seen BEFORE this row arrived".
 
     The measure must be integral; the result column is ``scan_max``

@@ -212,7 +212,7 @@ def events_watermark_late_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the running "max ts before me" comes from
     operators/reduce.scan_max_distributed — the two-phase exscan
-    (range-sort + per-partition maxes + narrow Arrow pass), NOT a
+    (range-sort + per-partition maxes + JVM offset projection), NOT a
     global single-partition window; the oracle states the naive
     window form DuckDB can afford locally.
     """

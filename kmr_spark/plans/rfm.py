@@ -16,7 +16,7 @@ reconstruction, ntile_from_rank).
 Scale shape: one per-customer aggregate (map-side combinable), then
 ONE distributed exscan ranking of the metric-stacked customer table
 (:func:`kmr_spark.operators.sort.ranking_per_group` — range-partition
-sort + per-partition count exscan + narrow Arrow offset pass;
+sort + per-partition count exscan + JVM offset projection;
 reference analog KMR's sampling sort, src/kmrmoreops.c:469-536) —
 NOT three unpartitioned ntile windows, which would funnel every
 customer through a single task. A custkey-keyed pivot aggregate and
@@ -66,7 +66,7 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table three times tagged by metric, encode the two DESC orders
     # by negation (strictly monotone, tie-preserving), and rank with
     # metric as the group key. One sort + one tiny count-collect + one
-    # narrow Arrow pass instead of three of each — same distributed
+    # offset projection instead of three of each — same distributed
     # shape (each metric's ranks spread over the whole cluster), ~3x
     # cheaper in fixed job cost. The whole rank-to-census pipeline runs
     # under a row-count-sized shuffle width: at sf0.1 the 3x|customers|

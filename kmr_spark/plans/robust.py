@@ -7,10 +7,11 @@ the DuckDB oracle reproduces them bit-for-bit; doubles are derived
 after aggregation with an identical expression in both engines.
 
 Scale notes: groups are (event_type, day) — bounded per key, the
-memory model both grouped-agg pandas UDFs and applyInPandas require
-(one group per Arrow batch; same caveat as KMR's redfn, which also
-sees a key's full value array in memory). For unbounded groups the
-two-pass expression forms in plans/analytics.py are the right tool.
+memory model both grouped-agg pandas UDFs (one group per Arrow batch)
+and KVS.reduce's sorted-run redfn (one key's values at a time) require;
+KMR's redfn has the same caveat, it too sees a key's full value array
+in memory. For unbounded groups the two-pass expression forms in
+plans/analytics.py are the right tool.
 """
 
 from __future__ import annotations
@@ -86,9 +87,11 @@ def _median_redfn(key, values):
 
 def events_median_kvs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(event_type, day) exact integer median of cents through the
-    KVS.reduce Arrow path (applyInPandas / FlatMapGroupsInPandas —
-    the kmr_reduce surface, reference src/kmrbase.c:2607): the redfn
-    receives the key's full value array, exactly like KMR's redfn.
+    KVS.reduce Arrow path (the kmr_reduce surface, reference
+    src/kmrbase.c:2607): hash exchange on the key, sort within
+    partitions, one MapInPandas function per partition that calls the
+    redfn once per run of equal keys — the redfn receives the key's
+    full value array, exactly like KMR's redfn.
     """
     ev = load_tables(spark, sf_dir)["events"]
     kvs = KVS.from_columns(

@@ -11,8 +11,8 @@ deliberately avoid ``Window.partitionBy("event_type")``: with ~5
 event types the whole table would funnel through 5 tasks. Instead
 ranks come from the distributed exscan
 (:func:`kmr_spark.operators.sort.ranking_per_group` — range-partition
-by (type, key), per-(partition, type) count exscan, narrow Arrow
-offset pass; reference analog: KMR's sampling-sort splitters,
+by (type, key), per-(partition, type) count exscan, JVM offset
+projection; reference analog: KMR's sampling-sort splitters,
 src/kmrmoreops.c:469-536,764-805), and NTILE is reconstructed exactly
 from (rank, group size) via
 :func:`kmr_spark.operators.sort.ntile_from_rank`.

@@ -62,6 +62,56 @@ def test_reduce_python_fn(spark):
     assert dict(out.collect_pairs()) == {0: 0 + 3 + 6 + 9, 1: 1 + 4 + 7 + 10, 2: 2 + 5 + 8 + 11}
 
 
+# A NULL key, a NULL value, and keys that share Arrow batches.
+NULLY = [(1, 10), (1, 20), (None, 5), (None, 7), (2, None), (2, 3)]
+
+
+@pytest.mark.parametrize("batch_rows", [10000, 1])
+def test_reduce_pinned_null_and_batch_semantics(spark, batch_rows):
+    """The redfn's view of NULLs, pinned to the one-group-per-Arrow-
+    batch form it replaced: a NULL key is one group whose key is NaN,
+    a NULL value turns that key's values to floats with a NaN, and a
+    group's values never depend on which groups share its batch."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(batch_rows))
+    try:
+        kvs = KVS.from_pairs(spark, NULLY, "key long, value long")
+        counts = dict(kvs.reduce(lambda k, vs: [(k, len(vs))]).collect_pairs())
+        assert counts == {1: 2, 2: 2, None: 2}
+
+        def seen_by(k, vs):
+            """(key type, key, values with NaN last, value types);
+            NaN reads "nan" so it compares equal to itself."""
+            def norm(x):
+                return "nan" if x != x else x
+            ordered = sorted(vs, key=lambda v: (v != v, v))
+            return [(None if k != k else int(k),
+                     repr((type(k).__name__, (norm(k), [norm(v) for v in ordered]),
+                           sorted(type(v).__name__ for v in vs))))]
+
+        seen = kvs.reduce(seen_by, "key long, value string").collect_pairs()
+        assert dict(seen) == {
+            1: repr(("int64", (1, [10, 20]), ["int", "int"])),
+            2: repr(("int64", (2, [3.0, "nan"]), ["float", "float"])),
+            None: repr(("float64", ("nan", [5, 7]), ["int", "int"])),
+        }
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_reduce_empty_and_variable_output(spark):
+    """Empty input reduces to nothing; a redfn may emit 0 or 3 pairs
+    per key."""
+    kvs = KVS.from_pairs(spark, NULLY, "key long, value long")
+    empty = kvs.filter(F.col("key") > 100)
+    assert empty.reduce(lambda k, vs: [(k, 1)]).collect_pairs() == []
+    assert kvs.reduce(lambda k, vs: []).collect_pairs() == []
+    three = kvs.reduce(lambda k, vs: [(k, i) for i in range(3)]).collect_pairs()
+    assert sorted(three, key=repr) == sorted(
+        [(k, i) for k in (1, 2, None) for i in range(3)], key=repr)
+
+
 def test_reduce_expr_and_count_keys(spark):
     kvs = KVS.from_pairs(
         spark, [(i % 3, i) for i in range(12)], "key long, value long")
@@ -227,3 +277,11 @@ def test_checkpoint_or_build_builds_when_absent(spark, tmp_path):
     again = KVS.checkpoint_or_build(
         spark, ck, lambda: (_ for _ in ()).throw(AssertionError("recompute")))
     assert sorted(again.collect_pairs()) == [(1, 10), (2, 20)]
+
+
+def test_events_median_kvs_matches_oracle(spark, duck):
+    """The registry's KVS.reduce consumer, oracle-exact at sf0.01."""
+    from conftest import assert_matches_oracle
+    from kmr_spark.plans.robust import MEDIAN_KVS_SQL, events_median_kvs
+
+    assert_matches_oracle(spark, duck, events_median_kvs, MEDIAN_KVS_SQL)

@@ -160,3 +160,33 @@ def test_scan_distributed_matches_window_form(spark):
     expect = {r.k: r.scan for r in
               scan_on_values(df, "v", [F.col("k")]).collect()}
     assert got == expect
+
+
+def test_scan_distributed_skips_all_null_partition(spark):
+    """A range partition whose measures are all NULL sums to 0, like the
+    NULL-skipping window SUM (it used to raise on the driver)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from kmr_spark.operators.reduce import scan_distributed
+
+    rows = [(i, None if i < 15 or i % 7 == 0 else i * 3 - 50) for i in range(40)]
+    df = spark.createDataFrame(rows, "k long, v long")
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")  # keep 4 range partitions, the first all-NULL
+    try:
+        first = (df.orderBy("k").groupBy(F.spark_partition_id().alias("p"))
+                 .agg(F.count("*"), F.count("v")).orderBy("p").first())
+        got = {r.k: r.scan for r in
+               scan_distributed(df, "v", [F.col("k")]).collect()}
+    finally:
+        spark.conf.set(conf, old)
+    assert first[1] > 0 and first[2] == 0, f"first range partition {first}"
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (k BIGINT, v BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    want = dict(con.execute(
+        "SELECT k, coalesce(sum(v) OVER (ORDER BY k ROWS BETWEEN UNBOUNDED "
+        "PRECEDING AND 1 PRECEDING), 0) FROM t").fetchall())
+    assert got == want

@@ -243,15 +243,26 @@ def test_weighted_sample_uses_take_ordered(spark):
 def test_robust_queries_use_arrow_paths(spark):
     """The §2.9 UDF surface under the gate: the trimmed-mean query must
     aggregate through the grouped-agg pandas UDAF (AggregateInPandas)
-    and the KVS median through applyInPandas (FlatMapGroupsInPandas)."""
+    and the KVS median through KMR's sorted-run reduce: MapInPandas
+    above a Sort above a hash Exchange on the key, no per-row UDF."""
     from kmr_spark.plans.robust import events_median_kvs, events_trimmed_mean
 
     p1 = _plan(events_trimmed_mean(spark, SF))
     assert "AggregateInPandas" in p1 or "ArrowAggregatePython" in p1, p1
-    p2 = _plan(events_median_kvs(spark, SF))
-    assert ("FlatMapGroupsInPandas" in p2
-            or "FlatMapGroupsInArrow" in p2
-            or "ArrowGroupedMapPython" in p2), p2
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        events_median_kvs(spark, SF).explain()
+    p2 = buf.getvalue()
+    nodes = [ln.strip(" +-:") for ln in
+             p2.split("== Physical Plan ==")[1].splitlines()]
+    below = nodes[next(i for i, n in enumerate(nodes)
+                       if n.startswith("MapInPandas")):]
+    sort, exchange = (next(n for n in below if n.startswith(op))
+                      for op in ("Sort ", "Exchange "))
+    assert below.index(sort) < below.index(exchange), p2
+    assert sort.startswith("Sort [key#"), p2
+    assert exchange.startswith("Exchange hashpartitioning(key#"), p2
+    assert "BatchEvalPython" not in p2, p2
 
 
 def test_no_unpartitioned_rank_windows(spark):

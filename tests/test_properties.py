@@ -41,6 +41,30 @@ def test_reduce_sum_matches_counter(spark, pairs):
     assert dict(out.collect_pairs()) == dict(expect)
 
 
+@given(pairs=st.lists(st.tuples(st.integers(-4, 4), st.integers(-10**9, 10**9)),
+                     min_size=0, max_size=60),
+       batch_rows=st.integers(1, 7))
+@SETTINGS
+def test_python_reduce_matches_counter_across_batches(spark, pairs, batch_rows):
+    """KVS.reduce's redfn sees each key exactly once with all its
+    values, even when tiny Arrow batches split a key's run."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(batch_rows))
+    try:
+        kvs = KVS.from_pairs(spark, pairs, "key long, value long")
+        out = kvs.reduce(lambda k, vs: [(k, len(vs)), (k + 100, sum(vs))])
+        got = Counter(out.collect_pairs())
+    finally:
+        spark.conf.set(conf, old)
+    counts, sums = Counter(k for k, _ in pairs), Counter()
+    for k, v in pairs:
+        sums[k] += v
+    expect = Counter({(k, n): 1 for k, n in counts.items()})
+    expect.update({(k + 100, sums[k]): 1 for k in counts})
+    assert got == expect
+
+
 @given(pairs=pairs_strategy)
 @SETTINGS
 def test_sort_is_sorted_multiset(spark, pairs):
