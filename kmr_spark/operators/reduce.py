@@ -11,6 +11,10 @@ But most real aggregations are expressible, and the expressible path
 gets map-side partial aggregation for free (KMR's "reduce without
 shuffle is a combiner" idiom, src/kmrbase.c:2590-2604, is automatic in
 HashAggregateExec).
+
+The distributed prefix scans (:func:`scan_distributed`,
+:func:`scan_max_distributed`) are the sum and max cases of the one
+exscan core in ``operators/sort.py`` (``_exscan``), which also ranks.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DataType, IntegralType
 
 from kmr_spark.operators.pyworker import skip_unchanged_zip_rereads
+from kmr_spark.operators.sort import _exscan
 
 
 def _null_free(name: str, dtype: DataType) -> tuple[Column, str | None]:
@@ -183,124 +188,40 @@ def scan_on_values(df: DataFrame, value: str = "value",
 
 def scan_distributed(df: DataFrame, value: str | list[str],
                      order: list[str | Column]) -> DataFrame:
-    """Global NON-INCLUSIVE prefix sum at scale — the two-phase exscan
-    KMR itself uses (MPI_Exscan over per-rank totals,
-    src/kmrmoreops.c:943) and the strategy operators/sort.ranking
-    already applies to row counts, generalized to an integer measure:
-
-    1. range-partition + locally sort (orderBy, persisted);
-    2. collect per-partition SUMS (tiny — one long per partition);
-    3. add the exscan offset (array literal indexed by
-       ``spark_partition_id`` — ranking's codegen recipe) plus the
-       in-partition running sum from a window PARTITIONED BY the
-       cached sort's partition id, ordered by the in-partition record
-       number (``monotonically_increasing_id``'s documented layout).
-
-    Step 3 is pure JVM (guide §4.1): the previous form shipped every
-    ranked row JVM->Arrow->Python->JVM through a ``mapInPandas`` pass
-    just to add the running-sum columns.  The per-pid window costs one
-    hash exchange of the (already aggregated) input — each window
-    group is exactly one sort partition, so parallelism and peak
-    memory match the sort's, at any scale.
+    """Global NON-INCLUSIVE prefix sum at scale: the sum case of the
+    one exscan core, :func:`kmr_spark.operators.sort._exscan` (KMR's
+    MPI_Exscan over per-rank totals, src/kmrmoreops.c:943) — range
+    sort, per-partition sums, driver exscan, and the in-partition
+    running sum from a window partitioned by the sort's partition id.
 
     No single-partition global window anywhere, so this is the form
     that survives 100 TB (scan_on_values stays as the windowed
-    parity/debug surface). The measure column must be integral —
-    float prefix sums would be partition-order-dependent. NULL measures
-    are skipped, as SQL's ``SUM`` skips them: a NULL row adds 0 to the
-    rows after it, and so does a partition whose measures are all NULL.
-
-    The result is materialized before returning (ranking's task-id
-    caveat: the offset/pid columns are only the sort's partition index
-    while the sorted frame executes through the persisted scan), so
-    callers can compose it freely.
+    parity/debug surface). The measure columns must be integral —
+    float prefix sums would be partition-order-dependent. One ``scan``
+    column, or ``scan_<value>`` per column when ``value`` is a list.
+    NULL measures are skipped, as SQL's ``SUM`` skips them: a NULL row
+    adds 0 to the rows after it, and so does a partition whose
+    measures are all NULL. The result is materialized before returning
+    (the core's partition-id caveat), so callers can compose it freely.
     """
-    from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
-
-    from kmr_spark.session import materialize_release
-
     values = [value] if isinstance(value, str) else list(value)
-    sdf = df.orderBy(*order).persist(StorageLevel.MEMORY_AND_DISK)
-    totals = (
-        sdf.select(F.spark_partition_id().alias("pid"),
-                   *[F.col(v) for v in values])
-        .groupBy("pid").agg(*[F.sum(v).alias(v) for v in values])
-        .collect()
-    )
-    offsets: dict[int, list[int]] = {}
-    acc = [0] * len(values)
-    for r in sorted(totals, key=lambda r: r["pid"]):
-        offsets[r["pid"]] = list(acc)
-        # an all-NULL partition sums to NULL; SUM skips NULLs, so add 0
-        acc = [a + (r[v] or 0) for a, v in zip(acc, values)]
-
-    scan_cols = [f"scan_{v}" if len(values) > 1 else "scan"
-                 for v in values]
-    n_parts = max(max(offsets, default=-1) + 1, 1)
-    arrs = [
-        F.array(*[F.lit(offsets.get(p, [0] * len(values))[j]).cast("long")
-                  for p in range(n_parts)])
-        for j in range(len(values))
-    ]
-    base = sdf.select(F.spark_partition_id().alias("__pid"),
-                      F.monotonically_increasing_id().alias("__mid"), "*")
-    w = (Window.partitionBy("__pid").orderBy("__mid")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    out = base.select(
-        *[(F.element_at(arr, F.col("__pid") + 1)
-           + F.coalesce(F.sum(v).over(w), F.lit(0))).cast("long").alias(c)
-          for arr, v, c in zip(arrs, values, scan_cols)],
-        *[F.col(f.name) for f in sdf.schema.fields])
-    return materialize_release(out, sdf)
+    names = [f"scan_{v}" if len(values) > 1 else "scan" for v in values]
+    return _exscan(df, order, "sum", measures=values, names=names,
+                   materialize=True)
 
 
 def scan_max_distributed(df: DataFrame, value: str,
                          order: list[str | Column]) -> DataFrame:
-    """Global NON-INCLUSIVE prefix MAX at scale — the sum exscan above
-    generalized to the max monoid (KMR's MPI_Exscan accepts any op;
-    src/kmrmoreops.c:943). The first row in the global order gets NULL
-    (no prior element — max has no integer identity the data can't
-    collide with). Same three-phase shape: range-partition sort,
-    collect per-partition maxes (one long each), driver exscan, JVM
-    offset projection. Powers watermark-lateness audits: "the largest
-    timestamp seen BEFORE this row arrived".
+    """Global NON-INCLUSIVE prefix MAX at scale: the max case of the
+    exscan core (KMR's MPI_Exscan accepts any op; src/kmrmoreops.c:943).
+    Powers watermark-lateness audits: "the largest timestamp seen
+    BEFORE this row arrived".
 
     The measure must be integral; the result column is ``scan_max``
-    (nullable long), materialized before returning (task-id caveat,
-    see :func:`scan_distributed`).  Same pure-JVM step 3 as
-    :func:`scan_distributed` (guide §4.1): exscan prefix-max from an
-    array literal (NULL for the first partition — max has no integer
-    identity), in-partition prefix max from a per-pid window;
-    ``greatest`` skips NULLs, so the first global row stays NULL.
+    (nullable long), materialized before returning. NULL measures are
+    skipped, and a row with no non-NULL measure before it — the first
+    row in the global order above all — gets NULL (max has no integer
+    identity the data can't collide with).
     """
-    from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
-
-    from kmr_spark.session import materialize_release
-
-    sdf = df.orderBy(*order).persist(StorageLevel.MEMORY_AND_DISK)
-    totals = (
-        sdf.select(F.spark_partition_id().alias("pid"), F.col(value))
-        .groupBy("pid").agg(F.max(value).alias("m"))
-        .collect()
-    )
-    prefix: dict[int, int | None] = {}
-    acc: int | None = None
-    for r in sorted(totals, key=lambda r: r["pid"]):
-        prefix[r["pid"]] = acc
-        if r["m"] is not None:
-            acc = r["m"] if acc is None else max(acc, r["m"])
-
-    n_parts = max(max(prefix, default=-1) + 1, 1)
-    arr = F.array(*[F.lit(prefix.get(p)).cast("long")
-                    for p in range(n_parts)])
-    base = sdf.select(F.spark_partition_id().alias("__pid"),
-                      F.monotonically_increasing_id().alias("__mid"), "*")
-    w = (Window.partitionBy("__pid").orderBy("__mid")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    out = base.select(
-        F.greatest(F.element_at(arr, F.col("__pid") + 1),
-                   F.max(value).over(w)).cast("long").alias("scan_max"),
-        *[F.col(f.name) for f in sdf.schema.fields])
-    return materialize_release(out, sdf)
+    return _exscan(df, order, "max", measures=[value], names=["scan_max"],
+                   materialize=True)

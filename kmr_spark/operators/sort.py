@@ -8,12 +8,21 @@ src/kmrmoreops.c:469-536). Spark's ``orderBy`` IS that algorithm
 global sort is a one-liner and the interesting parity work is ranking
 and limit, which in KMR depend on rank order — here they take an
 explicit ordering.
+
+:func:`ranking`, :func:`ranking_per_group` and ``operators/reduce.py``'s
+``scan_distributed`` / ``scan_max_distributed`` are thin wrappers over
+one exscan core, :func:`_exscan` (count, sum and max cases).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import math
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, LongType, MapType, StructField,
+                               StructType)
 from pyspark.storagelevel import StorageLevel
 
 
@@ -74,77 +83,146 @@ def is_globally_sorted(df: DataFrame, *order: str) -> bool:
     return bad == 0
 
 
-def ranking(df: DataFrame, order: list[str | Column],
-            materialize: bool = False,
+def _exscan(df: DataFrame, order: list[str | Column], op: str,
+            measures: Sequence[str] = (), groups: Sequence[str] = (),
+            names: Sequence[str] = ("rank",), materialize: bool = False,
             cache_registry: list[DataFrame] | None = None) -> DataFrame:
-    """Global 0-based position under an explicit total order
-    (kmr_ranking, src/kmrmoreops.c:764-805).
+    """Exclusive scan of ``op`` (``count``, ``sum`` or ``max``) under an
+    explicit total order: KMR's one exscan primitive, an ``MPI_Exscan``
+    over per-rank totals that accepts any op (src/kmrmoreops.c:872-972),
+    with :func:`ranking` as its count case (src/kmrmoreops.c:764-805).
 
-    Same algorithm as KMR (exscan of per-partition counts + local
-    index), expressed Spark-first:
+    1. range-partition + locally sort (``orderBy``), persisted so every
+       later job sees the same partitions and record numbers;
+    2. one tiny collect of the per-(partition, group) totals;
+    3. a driver-side exclusive prefix of those totals in partition
+       order, under the op's combine and identity: count and sum add
+       from 0 (an all-NULL partition sum adds 0, as SQL's ``SUM`` skips
+       NULLs), max is a NULL-skipping max from NULL;
+    4. the offsets as an array literal indexed by
+       ``spark_partition_id``, added to an in-partition step in one JVM
+       projection (no Python boundary, guide §4.1).
 
-    1. range-partition + locally sort (``orderBy``) — persisted so the
-       two downstream jobs see identical partitioning;
-    2. count rows per partition (tiny collect — this is KMR's MPI_Exscan);
-    3. narrow codegen projection adds offset + local index. No global
-       window (which would serialize through one partition), no RDD
-       round-trip, no Python boundary.
+    The in-partition step depends on the op. Count adds the record
+    number from ``monotonically_increasing_id``'s documented layout
+    (partition id in the upper bits, consecutive 0-based record number
+    in the lower 33 bits): no window and no exchange beyond the sort's.
+    Sum and max take a running aggregate over a window partitioned by
+    the cached sort's partition id: one hash exchange, and each window
+    group is exactly one sort partition, so parallelism and peak memory
+    match the sort's at any scale. One result column per measure
+    (``names``), each a nullable long; the measures must be integral.
 
-    The offset lookup keys on the execution-time partition id, which is
-    only the SORT's partition index while the ranked frame is executed
-    as its own job — a downstream ``union`` shifts the second child's
-    task ids and every offset would silently miss (ranks restart per
-    partition). Callers that compose the result into a wider plan must
-    pass ``materialize=True``: the rows are computed immediately in
-    their own job (correct ids), the lineage is cut, and the internal
-    sort cache is released.
+    ``groups`` (count only) sort ahead of ``order``. A row's rank in its
+    group is its global rank minus the global rank of the group's first
+    row, and ``n_group`` (the second name) is the group's size. Both
+    come from one literal map keyed by ``struct(groups...)``, the keys
+    cast to the columns' own types, so NULL and any atomic group value
+    look up exactly. A literal map stays inside the cached scan's codegen
+    stage; a broadcast-join lookup measured ~0.3-0.7 s slower per query.
 
-    ``materialize=True`` localCheckpoints the FULL ranked frame —
-    correct only when the ranked rows themselves are the result
-    (graysort). A caller that immediately REDUCES the ranked frame
-    (zone maps, deciles) must not checkpoint the corpus (guide §5 —
-    at 60M rows the checkpointed blocks OOM an 8g heap): pass
-    ``cache_registry`` instead, aggregate while the sort cache is
-    live, and ``materialize_release(small_result, *registry)`` —
-    same pattern as :func:`ranking_per_group`.
-
-    The offset add is PURE CODEGEN (guide §4.1: no Python boundary):
-    rank = exscan_offset[partition] + in-partition row index, where the
-    index comes from ``monotonically_increasing_id``'s documented
-    layout (partition id in the upper bits, consecutive 0-based record
-    number in the lower 33) and the offset from an array literal
-    indexed by ``spark_partition_id`` — the previous ``mapInPandas``
-    pass shipped every row out to Python workers and back through
-    Arrow just to add this one column.
+    The offsets key on the EXECUTION-time partition id, which is the
+    sort's partition index only while the result runs as its own job
+    over the persisted sort: a downstream ``union`` shifts the second
+    child's task ids and every offset would silently miss.
+    ``materialize=True`` computes the rows in their own job, cuts the
+    lineage and releases the sort cache. Otherwise the cache stays live
+    for the lazy result and is appended to ``cache_registry`` if given.
     """
-    sdf = df.orderBy(*order).persist(StorageLevel.MEMORY_AND_DISK)
+    sdf = df.orderBy(*[F.col(g).asc() for g in groups], *order).persist(
+        StorageLevel.MEMORY_AND_DISK)
     if cache_registry is not None:
         cache_registry.append(sdf)
-    counts = (
-        sdf.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .count()
+    pid = F.spark_partition_id()
+    idx = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    totals = [F.count("*")] if op == "count" else [
+        (F.max if op == "max" else F.sum)(m) for m in measures]
+    n = 1 + len(groups)  # a row: pid, groups..., first record number, totals...
+    rows = (
+        sdf.select(pid.alias("__pid"), idx.alias("__idx"), *groups, *measures)
+        .groupBy("__pid", *groups)
+        .agg(F.min("__idx"), *totals)
         .collect()
     )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for r in sorted(counts, key=lambda r: r["pid"]):
-        offsets[r["pid"]] = acc
-        acc += r["count"]
 
+    def combine(acc, t):
+        if op == "max":
+            return acc if t is None else t if acc is None else max(acc, t)
+        return acc + (t or 0)
+
+    acc = [None if op == "max" else 0] * len(totals)
+    offsets: dict[int, list] = {}
+    start: dict[tuple, int] = {}
+    size: dict[tuple, int] = {}
+    # in partition order; within a partition, groups in their sort order
+    for r in sorted(rows, key=lambda r: (r[0], r[n])):
+        offsets.setdefault(r[0], acc)
+        if groups:
+            # Spark groups every NaN together: one NaN object, one key
+            key = tuple(math.nan if v != v else v for v in r[1:n])
+            start.setdefault(key, offsets[r[0]][0] + r[n])
+            size[key] = size.get(key, 0) + r[n + 1]
+        acc = [combine(a, t) for a, t in zip(acc, r[n + 1:])]
     n_parts = max(max(offsets, default=-1) + 1, 1)
-    arr = F.array(*[F.lit(offsets.get(p, 0)).cast("long")
-                    for p in range(n_parts)])
-    pid = F.spark_partition_id()
-    idx = (F.monotonically_increasing_id()
-           - F.shiftleft(pid.cast("long"), 33))
-    out = sdf.select(
-        (F.element_at(arr, pid + F.lit(1)) + idx).alias("rank"), "*")
+    # one cast per literal, not per element: each Column call costs the
+    # driver ~1-3 ms, and there is one element per partition
+    arrs = [F.array(*[F.lit(offsets.get(p, acc)[j]) for p in range(n_parts)])
+            .cast("array<long>") for j in range(len(totals))]
+
+    if op == "count":
+        cols = [F.element_at(arrs[0], pid + 1) + idx]
+        if groups:
+            # one map: group key -> [global rank of its first row, size]
+            entries = [x for k in start for x in (
+                F.struct(*map(F.lit, k)), F.array(F.lit(start[k]), F.lit(size[k])))]
+            typed = MapType(StructType([StructField(g, sdf.schema[g].dataType)
+                                        for g in groups]), ArrayType(LongType()))
+            hit = (F.element_at(F.create_map(*entries).cast(typed), F.struct(*groups))
+                   if entries else F.lit(None).cast("array<long>"))  # no rows
+            cols = [cols[0] - hit[0], hit[1]]
+        out = sdf.select(*[c.alias(n) for c, n in zip(cols, names)], "*")
+    else:
+        base = sdf.select(pid.alias("__pid"),
+                          F.monotonically_increasing_id().alias("__mid"), "*")
+        w = (Window.partitionBy("__pid").orderBy("__mid")
+             .rowsBetween(Window.unboundedPreceding, -1))
+
+        def step(off: Column, m: str) -> Column:
+            if op == "max":
+                return F.greatest(off, F.max(m).over(w))
+            return off + F.coalesce(F.sum(m).over(w), F.lit(0))
+
+        out = base.select(
+            *[step(F.element_at(arr, F.col("__pid") + 1), m).cast("long").alias(n)
+              for arr, m, n in zip(arrs, measures, names)],
+            *sdf.columns)
     if materialize:
         from kmr_spark.session import materialize_release
 
         return materialize_release(out, sdf)
     return out
+
+
+def ranking(df: DataFrame, order: list[str | Column],
+            materialize: bool = False,
+            cache_registry: list[DataFrame] | None = None) -> DataFrame:
+    """Global 0-based ``rank`` under an explicit total order
+    (kmr_ranking, src/kmrmoreops.c:764-805): the count case of
+    :func:`_exscan` — range sort, per-partition counts, driver exscan,
+    record-number add. No global window, no Python boundary.
+
+    Callers that compose the result into a wider plan (a ``union``
+    above all) must pass ``materialize=True`` (partition-id caveat,
+    see :func:`_exscan`). That localCheckpoints the FULL ranked frame,
+    right only when the ranked rows themselves are the result
+    (graysort). A caller that immediately REDUCES the ranked frame
+    (zone maps, deciles) must not checkpoint the corpus (guide §5: at
+    60M rows the checkpointed blocks OOM an 8g heap): pass
+    ``cache_registry`` instead, aggregate while the sort cache is live,
+    and ``materialize_release(small_result, *registry)``.
+    """
+    return _exscan(df, order, "count", materialize=materialize,
+                   cache_registry=cache_registry)
 
 
 def ranking_per_group(df: DataFrame, group_cols: list[str],
@@ -152,103 +230,32 @@ def ranking_per_group(df: DataFrame, group_cols: list[str],
                       materialize: bool = False,
                       cache_registry: list[DataFrame] | None = None,
                       persist_input: bool = False) -> DataFrame:
-    """Per-group 0-based rank + group size under an explicit total
-    order, without a ``Window.partitionBy`` (kmr_ranking generalized;
-    reference src/kmrmoreops.c:764-805 exscan shape).
+    """Per-group 0-based ``rank`` and group size ``n_group`` under an
+    explicit total order, without a ``Window.partitionBy`` (kmr_ranking
+    generalized, src/kmrmoreops.c:764-805).
 
     A rank window partitioned by a low-cardinality key (e.g. 5 event
-    types) funnels the whole table through |groups| tasks. This keeps
-    the data range-partitioned instead: sort by (group, order) — the
-    RangePartitioner spreads each group across MANY partitions — then
-    exscan per-(partition, group) counts driver-side (tiny: at most
-    |partitions|x|groups| rows) and add offsets in one narrow CODEGEN
-    projection (literal-map lookup + in-partition record index — no
-    Python boundary, guide §4.1). Adds ``rank`` (0-based within group)
-    and ``n_group`` columns.
+    types) funnels the whole table through |groups| tasks. This is the
+    grouped count case of :func:`_exscan` instead: one range sort by
+    (groups, order), which spreads each group across MANY partitions,
+    and the group's rank is the global rank minus that of its first row.
 
-    Group keys must be null-free strings/ints/bools (they are rendered
-    into the lookup keys with cast-to-string semantics on both sides);
-    same partition-id caveat as :func:`ranking` — pass
-    ``materialize=True`` when composing into a union. With
-    ``materialize=False`` the internal sorted persist stays live for
-    the lazy result; callers composing several rankings can pass a
-    ``cache_registry`` list to collect the persisted frames and
-    release them all after one final materialization (cheaper than
-    checkpointing each ranking separately).
+    ``materialize`` and ``cache_registry`` as in :func:`ranking`;
+    callers composing several rankings can collect the persisted frames
+    in one registry and release them all after one final
+    materialization (cheaper than checkpointing each ranking).
+    ``persist_input`` caches ``df`` first: the RangePartitioner's
+    sampling job executes the upstream plan once BEFORE the shuffle
+    does, so an expensive input (JSON parse, hash pipeline) is computed
+    once and sampled from cache.
     """
-    gcols = list(group_cols)
     if persist_input:
-        # the RangePartitioner's sampling job executes the upstream
-        # plan once BEFORE the shuffle pass does — an expensive input
-        # (JSON parse, hash pipeline) should be computed once and
-        # sampled from cache
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         if cache_registry is not None:
             cache_registry.append(df)
-    sdf = df.orderBy(*[F.col(c).asc() for c in gcols], *order).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(sdf)
-    # per-(partition, group) count AND first in-partition row index
-    # (min monotonically_increasing_id, masked): both jobs read the
-    # SAME persisted sort, so the record numbers agree between this
-    # pass and the output projection below
-    mid_idx = (F.monotonically_increasing_id()
-               - F.shiftleft(F.spark_partition_id().cast("long"), 33))
-    counts = (
-        sdf.select(F.spark_partition_id().alias("pid"), *gcols,
-                   mid_idx.alias("__idx"))
-        .groupBy("pid", *gcols)
-        .agg(F.count("*").alias("count"), F.min("__idx").alias("start"))
-        .collect()
-    )
-    totals: dict[tuple, int] = {}
-    # adj = global-exscan offset of (pid, group) MINUS the group's
-    # first in-partition row index, so rank = adj + in-partition index
-    # — one codegen add per row, no Python boundary (guide §4.1; the
-    # previous mapInPandas pass shipped the whole frame through Arrow)
-    adj: dict[tuple, int] = {}
-    for r in sorted(counts, key=lambda r: r["pid"]):
-        key = tuple(r[c] for c in gcols)
-        adj[(r["pid"],) + key] = totals.get(key, 0) - r["start"]
-        totals[key] = totals.get(key, 0) + r["count"]
-
-    # LITERAL MAP lookup keyed by "pid<US>group...": stays inside the
-    # cached scan's codegen stage (a broadcast-join lookup measured
-    # ~0.3-0.7 s SLOWER per query here — local-relation build + join
-    # planning — and a map literal of |partitions|x|groups| entries is
-    # KBs). Group values are rendered with Spark's own cast-to-string
-    # on both sides, so the keys agree byte-for-byte.
-    sep = "\x1f"
-    key_of = F.concat_ws(
-        sep, F.spark_partition_id().cast("string"),
-        *[F.col(c).cast("string") for c in gcols])
-    gkey_of = F.concat_ws(sep, *[F.col(c).cast("string") for c in gcols])
-
-    def _str(v) -> str:
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        return str(v)
-
-    adj_entries: list = []
-    for pid_key, a in adj.items():
-        k = sep.join([_str(pid_key[0])] + [_str(v) for v in pid_key[1:]])
-        adj_entries += [F.lit(k), F.lit(int(a)).cast("long")]
-    tot_entries: list = []
-    for gkey, t in totals.items():
-        tot_entries += [F.lit(sep.join(_str(v) for v in gkey)),
-                        F.lit(int(t)).cast("long")]
-    adj_map = F.create_map(*adj_entries) if adj_entries else F.create_map()
-    tot_map = F.create_map(*tot_entries) if tot_entries else F.create_map()
-    out = sdf.select(
-        (F.element_at(adj_map, key_of) + mid_idx).alias("rank"),
-        F.element_at(tot_map, gkey_of).alias("n_group"),
-        "*")
-    if materialize:
-        from kmr_spark.session import materialize_release
-
-        return materialize_release(out, sdf)
-    return out
+    return _exscan(df, order, "count", groups=list(group_cols),
+                   names=["rank", "n_group"], materialize=materialize,
+                   cache_registry=cache_registry)
 
 
 def ntile_from_rank(rn: Column, n: Column, k: int) -> Column:

@@ -62,8 +62,10 @@ def main() -> None:
             os.makedirs(args.plans, exist_ok=True)
             # materialize_release stubbed to a pass-through so the
             # dump shows the PIPELINE's plan, not the checkpoint scan
-            # (and building the frame doesn't eagerly execute it) —
-            # ADVICE r11 #1; timed runs below use the real function
+            # (and building the frame doesn't execute the final
+            # materialization; exscan and ranking queries still run
+            # their sort and collect jobs) — ADVICE r11 #1; timed
+            # runs below use the real function
             from plan_stub import passthrough_materialize
             with passthrough_materialize():
                 df = queries[name](spark, sf_dir)

@@ -8,8 +8,8 @@ queries it polices — and building the frame EAGERLY executes the whole
 query during what should be a plan-only step (ADVICE r11 #1).  The
 stub returns the un-checkpointed plan instead; it must only ever be
 used for ``explain``, never to execute the returned frame (the
-exscan-offset validity caveats in operators/sort.py assume the real
-materialization).
+exscan-offset validity caveat of operators/sort.py ``_exscan`` assumes
+the real materialization).
 
 ``materialize_release`` is imported both module-level and
 function-local across kmr_spark, so the stub patches the session

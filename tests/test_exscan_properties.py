@@ -167,3 +167,88 @@ def test_top_k_matches_sorted_slice(spark, rows, k):
     want = [(t[1], t[2])
             for t in sorted(rows, key=lambda t: (-t[1], t[2]))[:k]]
     assert got == want
+
+
+# The properties below draw the NULL measures and NULL groups the ones
+# above never do. Each keeps every range partition of the sort (AQE
+# coalescing off, or a small input may collapse into one) and checks
+# that its input spans at least two, so cross-partition offsets are used.
+COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+
+
+def _run_split(spark, df, order, fn):
+    """fn() with AQE coalescing off; asserts ``df`` sorted by ``order``
+    spans at least two range partitions."""
+    old = spark.conf.get(COALESCE)
+    spark.conf.set(COALESCE, "false")
+    try:
+        parts = (df.orderBy(*order).select(F.spark_partition_id().alias("p"))
+                 .distinct().count())
+        assert parts >= 2, f"input fits in {parts} range partition"
+        return fn()
+    finally:
+        spark.conf.set(COALESCE, old)
+
+
+nullable_rows_strategy = st.lists(
+    st.tuples(st.sampled_from([None, "a", "b", "a\x1fb"]),  # nullable group
+              st.one_of(st.none(), st.integers(-1000, 1000)),  # measure
+              st.one_of(st.none(), st.integers(-1000, 1000)),  # measure
+              st.integers(0, 10**6)),                          # unique id
+    min_size=8, max_size=50, unique_by=lambda t: t[3],
+)
+NULLABLE_SCHEMA = "g string, a long, b long, id long"
+
+
+@given(rows=nullable_rows_strategy)
+@SETTINGS
+def test_scan_max_distributed_skips_nulls_across_partitions(spark, rows):
+    """Prefix max against a Python running max that skips NULLs; the
+    first row's measure is NULL, so rows stay NULL until a value."""
+    from kmr_spark.operators.reduce import scan_max_distributed
+
+    first = min(t[3] for t in rows)
+    rows = [(g, None if i == first else a, b, i) for g, a, b, i in rows]
+    df = spark.createDataFrame(rows, NULLABLE_SCHEMA)
+    out = _run_split(spark, df, ["id"], lambda: scan_max_distributed(
+        df, "a", [F.col("id")]).collect())
+    got = {r["id"]: r["scan_max"] for r in out}
+    want, running = {}, None
+    for _, a, _, i in sorted(rows, key=lambda t: t[3]):
+        want[i] = running
+        if a is not None:
+            running = a if running is None else max(running, a)
+    assert got == want
+
+
+@given(rows=nullable_rows_strategy)
+@SETTINGS
+def test_scan_distributed_multi_measure_skips_nulls(spark, rows):
+    """Two nullable measures at once against accumulate with NULL as 0."""
+    from kmr_spark.operators.reduce import scan_distributed
+
+    df = spark.createDataFrame(rows, NULLABLE_SCHEMA)
+    out = _run_split(spark, df, ["id"], lambda: scan_distributed(
+        df, ["a", "b"], [F.col("id")]).collect())
+    got = {r["id"]: (r["scan_a"], r["scan_b"]) for r in out}
+    ordered = sorted(rows, key=lambda t: t[3])
+    sums = {c: [0, *accumulate((t[c] or 0) for t in ordered)] for c in (1, 2)}
+    want = {t[3]: (sums[1][i], sums[2][i]) for i, t in enumerate(ordered)}
+    assert got == want
+
+
+@given(rows=nullable_rows_strategy)
+@SETTINGS
+def test_ranking_per_group_nullable_groups(spark, rows):
+    """A NULL group is one group; groups straddle range partitions."""
+    from kmr_spark.operators.sort import ranking_per_group
+
+    df = spark.createDataFrame(rows, NULLABLE_SCHEMA)
+    out = _run_split(spark, df, ["g", "id"], lambda: ranking_per_group(
+        df, ["g"], [F.col("id")], materialize=True).collect())
+    got = {r["id"]: (r["rank"], r["n_group"]) for r in out}
+    want = {}
+    for g in {t[0] for t in rows}:
+        members = sorted(t[3] for t in rows if t[0] == g)
+        want.update({i: (k, len(members)) for k, i in enumerate(members)})
+    assert got == want

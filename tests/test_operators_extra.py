@@ -105,6 +105,67 @@ def test_ranking_per_group_empty_and_single_row(spark):
     assert [(x.rank, x.n_group) for x in r] == [(0, 1)]
 
 
+def _assert_group_ranks_match_window(spark, rows, schema, groups):
+    """ranking_per_group over ``groups`` (ordered by v, id) against
+    ROW_NUMBER()-1 and COUNT(*) over Window.partitionBy(groups), with
+    every range partition of the sort kept (no AQE coalescing), so
+    groups straddle partitions."""
+    from pyspark.sql import Window
+
+    from kmr_spark.operators.sort import ranking_per_group
+
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        df = spark.createDataFrame(rows, schema)
+        order = [F.col("v").asc(), F.col("id").asc()]
+        got = {r.id: (r.rank, r.n_group) for r in
+               ranking_per_group(df, groups, order, materialize=True).collect()}
+        w = Window.partitionBy(*groups)
+        want = {r.id: (r.rank, r.n_group) for r in df.select(
+            "id", (F.row_number().over(w.orderBy(*order)) - 1).alias("rank"),
+            F.count("*").over(w).alias("n_group")).collect()}
+    finally:
+        spark.conf.set(conf, old)
+    assert got == want
+
+
+def test_ranking_per_group_null_string_group(spark):
+    """A NULL group value is a group of its own, not rank/n_group NULL."""
+    groups = [None, "a", "None", ""]
+    rows = [(groups[i % 4], i * 7 % 13, i) for i in range(60)]
+    _assert_group_ranks_match_window(
+        spark, rows, "g string, v long, id long", ["g"])
+
+
+def test_ranking_per_group_typed_group_keys(spark):
+    """Boolean, double (NaN, -0.0, 1e20), float and date group keys,
+    each with NULLs, look up under their own types; a NaN group that
+    straddles partitions is one group."""
+    import datetime
+
+    keys = {
+        "boolean": [True, False, None],
+        "double": [0.5, float("nan"), -0.0, 0.0, 1e20, None],
+        "float": [float("nan"), 1.5, None],
+        "date": [datetime.date(2024, 1, 1), datetime.date(1999, 12, 31), None],
+    }
+    for dtype, vals in keys.items():
+        rows = [(vals[i % len(vals)], i * 7 % 13, i) for i in range(60)]
+        _assert_group_ranks_match_window(
+            spark, rows, f"g {dtype}, v long, id long", ["g"])
+
+
+def test_ranking_per_group_separator_in_multi_column_keys(spark):
+    """Two-column groups whose strings hold the unit separator stay
+    distinct groups: ("x\x1fy", "z") is not ("x", "y\x1fz")."""
+    pairs = [("x\x1fy", "z"), ("x", "y\x1fz"), ("x", None), (None, "x")]
+    rows = [(*pairs[i % 4], i * 7 % 13, i) for i in range(40)]
+    _assert_group_ranks_match_window(
+        spark, rows, "g1 string, g2 string, v long, id long", ["g1", "g2"])
+
+
 def test_asof_join_tie_resolution(spark):
     """Simultaneous right rows resolve to the largest right_order value
     — deterministic, engine-independent."""

@@ -281,6 +281,65 @@ def test_no_unpartitioned_rank_windows(spark):
         assert "Window" not in plan, f"{fn.__name__} reintroduced a window"
 
 
+def _final_plan_nodes(df) -> list[str]:
+    """Physical plan node lines, without the ``== Initial Plan ==``
+    copy AQE prints beside a cached frame's final plan."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    nodes, skip = [], None
+    for ln in buf.getvalue().splitlines():
+        depth = len(ln) - len(ln.lstrip(" "))
+        if skip is not None and depth > skip:
+            continue
+        skip = depth if "== Initial Plan ==" in ln else None
+        if skip is None:
+            nodes.append(ln.strip(" +-:"))
+    return nodes
+
+
+def test_exscan_in_partition_step_per_op(spark):
+    """The count exscan (ranking, ranking_per_group) adds the record
+    number: no Window, and the range sort's Exchange is the only one.
+    Sum and max (scan_distributed, scan_max_distributed) keep the
+    running window over the sort's partition id."""
+    from unittest import mock
+
+    from pyspark.sql import functions as F
+
+    from kmr_spark.operators import reduce, sort
+
+    df = spark.range(200).select((F.col("id") % 3).alias("g"),
+                                 (F.col("id") * 7 % 101).alias("v"), "id")
+    order = [F.col("v"), F.col("id")]
+    held = []
+
+    def keep(out, *cached):
+        held.extend(cached)
+        return out
+
+    try:
+        for out in (sort.ranking(df, order, cache_registry=held),
+                    sort.ranking_per_group(df, ["g"], order,
+                                           cache_registry=held)):
+            nodes = _final_plan_nodes(out)
+            exchanges = [n for n in nodes if n.startswith("Exchange ")]
+            assert not any(n.startswith("Window") for n in nodes), nodes
+            assert len(exchanges) == 1, nodes
+            assert exchanges[0].startswith("Exchange rangepartitioning("), nodes
+        with mock.patch("kmr_spark.session.materialize_release", keep):
+            for out in (reduce.scan_distributed(df, "v", order),
+                        reduce.scan_max_distributed(df, "v", order)):
+                nodes = _final_plan_nodes(out)
+                assert any(n.startswith("Window [") for n in nodes), nodes
+                assert any(n.startswith("Exchange hashpartitioning(__pid")
+                           for n in nodes), nodes
+    finally:
+        for cached in held:
+            cached.unpersist()
+    assert len(held) == 4
+
+
 def test_zipf_topcut_is_take_ordered(spark):
     """The Zipf top-50 cut must be TakeOrderedAndProject (per-partition
     heap), not a global sort."""
