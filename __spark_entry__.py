@@ -11,6 +11,7 @@ aggregates the per-plan QUERIES / ORACLE_SQL registries.
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -21,6 +22,74 @@ from pyspark.sql import DataFrame, SparkSession
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
+
+
+#: Every module that registers queries, in registration order.  Each one
+#: exports QUERIES and ORACLE_SQL dicts.  Import errors propagate: a
+#: broken module must fail the registry, not silently shrink it.
+PLAN_MODULES = (
+    "kmr_spark.plans.tpch", "kmr_spark.plans.tpch_extra",
+    "kmr_spark.plans.wordcount", "kmr_spark.plans.graysort",
+    "kmr_spark.plans.analytics", "kmr_spark.plans.iterative",
+    "kmr_spark.plans.linalg", "kmr_spark.plans.generate",
+    "kmr_spark.plans.sampling", "kmr_spark.plans.layout",
+    "kmr_spark.plans.graphs", "kmr_spark.plans.incremental",
+    "kmr_spark.plans.semistruct", "kmr_spark.plans.sketches",
+    "kmr_spark.plans.timeseries", "kmr_spark.plans.quality",
+    "kmr_spark.plans.basket", "kmr_spark.plans.rfm",
+    "kmr_spark.plans.training", "kmr_spark.plans.bloomjoin",
+    "kmr_spark.plans.behavior", "kmr_spark.plans.diagnostics",
+    "kmr_spark.plans.valuation", "kmr_spark.plans.robust",
+    "kmr_spark.plans.winfuncs", "kmr_spark.plans.privacy",
+    "kmr_spark.plans.inference", "kmr_spark.plans.corpusstats",
+    "kmr_spark.plans.trends", "kmr_spark.plans.search",
+    "kmr_spark.plans.linkage", "kmr_spark.plans.watermark",
+    "kmr_spark.llm_ops.registry",
+)
+
+
+#: The driver checks only the first 50 registry entries, so the registry
+#: starts with the names that need a fresh CORRECTNESS row most:
+#: - the 12 queries whose plans changed in round 12 (OPTIMIZATION_r12.md),
+#: - then the longest-unchecked rows of CORRECTNESS_r01..r11 (oldest
+#:   round first, alphabetical within a round).
+#: The first 50 names are the rows of CORRECTNESS_r12.json in order; the
+#: last 11 slid past that check and lead the next window.  Every other
+#: name follows in reverse registration order (recent additions first,
+#: long-stable TPC-H last).
+_DRIVER_HEAD = (
+    # round-12 plan changes
+    "orders_pareto_share", "orders_gini_revenue", "parts_abc_classification",
+    "events_concurrent_sessions", "events_ks_test",
+    "events_watermark_late_census", "graph_modularity",
+    "events_forecast_reconciled", "events_anomaly_mad", "text_heaps_curve",
+    "docs_source_divergence_tv", "privacy_t_closeness",
+    # last checked in round 4
+    "train_temperature_mix", "users_spearman_freq_value",
+    # last checked in round 5
+    "emb_norm_deciles", "events_asof_click_attrib", "events_ewma_int",
+    "events_gap_histogram", "events_heavy_users_cms", "events_median_kvs",
+    "events_median_quickselect", "events_new_vs_returning",
+    "events_peak_rate", "events_props_schema_infer",
+    "events_retention_day_n", "events_rolling_wau",
+    "events_session_depth_histogram", "events_trending_streamed",
+    "events_trimmed_mean", "events_type_share_drift", "events_user_entropy",
+    "events_user_lifecycle", "events_user_streaks", "events_value_benford",
+    "events_velocity_features", "events_wau_stickiness",
+    "lineitem_price_discount_corr", "orders_customer_migration",
+    "orders_interpurchase_gaps", "orders_monthly_growth",
+    "orders_priority_mix", "orders_repeat_cohort", "profile_documents",
+    "text_tokenizer_fertility", "text_zipf_curve",
+    # last checked in round 6
+    "docs_source_divergence_js", "emb_gram_matrix", "events_acf_daily",
+    "events_asof_forward_sla", "events_bootstrap_ci",
+    # slid past the round-12 check (positions 51-61)
+    "events_bounce_rate", "events_cart_abandonment",
+    "events_changepoint_mean", "events_cohort_ltv_curve",
+    "events_diff_in_diff", "events_dow_hour_heatmap",
+    "events_duplicate_purchases", "events_forecast_snaive",
+    "events_hll_sliding", "events_jsonl_roundtrip", "events_linreg_trend",
+)
 
 
 def _registries():
@@ -37,430 +106,20 @@ def _registries():
             f"KMR_RMAT override vars set outside the scale sweep: "
             f"{leaked} — unset them (or set KMR_RMAT_SWEEP=1 if this "
             f"is an intentional scale-harness run)")
-    import kmr_spark.plans.tpch as tpch
-
-    modules = [tpch]
-    try:
-        import kmr_spark.plans.tpch_extra as tpch_extra
-        modules.append(tpch_extra)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.wordcount as wordcount
-        modules.append(wordcount)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.graysort as graysort
-        modules.append(graysort)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.analytics as analytics
-        modules.append(analytics)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.iterative as iterative
-        modules.append(iterative)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.linalg as linalg
-        modules.append(linalg)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.generate as generate
-        modules.append(generate)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.sampling as sampling
-        modules.append(sampling)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.layout as layout
-        modules.append(layout)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.graphs as graphs
-        modules.append(graphs)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.incremental as incremental
-        modules.append(incremental)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.semistruct as semistruct
-        modules.append(semistruct)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.sketches as sketches
-        modules.append(sketches)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.timeseries as timeseries
-        modules.append(timeseries)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.quality as quality
-        modules.append(quality)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.basket as basket
-        modules.append(basket)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.rfm as rfm
-        modules.append(rfm)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.training as training
-        modules.append(training)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.bloomjoin as bloomjoin
-        modules.append(bloomjoin)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.behavior as behavior
-        modules.append(behavior)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.diagnostics as diagnostics
-        modules.append(diagnostics)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.valuation as valuation
-        modules.append(valuation)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.robust as robust
-        modules.append(robust)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.winfuncs as winfuncs
-        modules.append(winfuncs)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.privacy as privacy
-        modules.append(privacy)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.inference as inference
-        modules.append(inference)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.corpusstats as corpusstats
-        modules.append(corpusstats)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.trends as trends
-        modules.append(trends)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.search as search
-        modules.append(search)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.linkage as linkage
-        modules.append(linkage)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.plans.watermark as watermark
-        modules.append(watermark)
-    except ImportError:
-        pass
-    try:
-        import kmr_spark.llm_ops.registry as llm_registry
-        modules.append(llm_registry)
-    except ImportError:
-        pass
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
-    for m in modules:
-        queries.update(getattr(m, "QUERIES", {}))
-        oracles.update(getattr(m, "ORACLE_SQL", {}))
-    queries = _rotate_for_driver_window(queries)
-    oracles = {n: oracles[n] for n in queries if n in oracles}
-    return queries, oracles
-
-
-# Queries that already have a driver-verified CORRECTNESS row (the r1/r2
-# first-50 window).  The driver checks only the first 50 registry entries,
-# so entries NOT in this set — never driver-checked, plus anything newly
-# added — are registered first; the already-green ones rotate behind in
-# reverse registration order (most recently added stay inside the window,
-# long-stable TPC-H falls out last).
-_DRIVER_CHECKED = frozenset({
-    "tpch_q1", "tpch_q2", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6",
-    "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q10", "tpch_q11", "tpch_q12",
-    "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16", "tpch_q17", "tpch_q18",
-    "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22",
-    "wordcount_topk", "graysort_rank",
-    "events_type_stats", "events_running_sum", "events_topn_per_user",
-    "events_sessionize", "events_tumbling_window", "set_ops_customers",
-    "events_asof_view", "events_tumbling_streamed", "events_value_histogram",
-    "events_exact_percentiles", "events_sliding_window",
-    "nation_balance_full_outer", "events_pivot_by_type", "revenue_rollup",
-    "events_sessionize_streamed", "events_cube_type_day",
-    "events_campaign_windows", "events_dedup_streamed",
-    "events_attribution_streamed",
-    "iter_pagerank", "iter_kmeans", "linalg_matmul", "gen_rmat",
-    "sample_events_stratified", "sample_docs_holdout", "sample_k_per_user",
-    # round-3 window: the 48 green rows of CORRECTNESS_r03.json (the
-    # full _R3_WINDOW minus the two typed-hash fails, which retry in
-    # the round-4 window below)
-    "events_enriched_streamed", "events_attribution_outer_streamed",
-    "emb_dim_stats", "events_zorder_layout", "profile_lineitem",
-    "graph_triangles", "graph_bfs", "events_incremental_merge",
-    "events_state_streamed", "events_value_rank",
-    "events_hll_users", "events_hll_hourly", "events_sketch_quantiles",
-    "events_resample_1h", "events_funnel", "events_retention_cohorts",
-    "events_anomaly_zscore", "events_conversion_lag", "events_dwell_time",
-    "validate_events", "part_cooccurrence", "orders_rfm_segments",
-    "doc_chunks", "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_ngram_jaccard", "dedup_editdistance", "dedup_clusters",
-    "multimodal_decode", "multimodal_audio", "multimodal_frames",
-    "multimodal_resize", "multimodal_features", "pack_sequences",
-    "corpus_clean_keepers", "sim_knn_bruteforce", "sim_ann_ivf",
-    "sim_ann_ivf_multiprobe", "sim_knn_quantized", "dedup_embedding",
-    "text_stats", "text_token_counts", "text_langid", "text_fingerprint",
-    "text_quality_filter", "text_tfidf_top_terms", "text_normalize",
-    # round-4 window: the 48 green rows of CORRECTNESS_r04.json (the
-    # full _R4_WINDOW minus the two exact-float entropy fails, which
-    # retry in the round-5 window below after the quantized-log fix)
-    "events_props_extract", "text_bigram_lm",
-    "events_session_campaign_overlap", "revenue_grouping_sets",
-    "events_session_window_native", "events_concurrent_sessions",
-    "emb_power_iteration", "sample_docs_weighted", "graph_components",
-    "events_hll_streamed", "events_time_weighted_avg",
-    "events_seasonal_baseline", "events_cusum_drift",
-    "events_gate_streamed", "train_epoch_shuffle",
-    "train_source_mixture", "train_temperature_mix",
-    "lineitem_bloom_prune", "events_scd2_state",
-    "events_markov_transitions", "events_ab_test",
-    "events_path_trigrams", "events_multitouch_attribution",
-    "events_ab_test_sequential",
-    "skew_report_orders", "join_size_estimate", "events_decayed_value",
-    "orders_pareto_share", "users_spearman_freq_value",
-    "dedup_incremental", "train_split_leakage_safe",
-    "dedup_containment", "dedup_summary", "multimodal_audio_features",
-    "multimodal_image_ahash", "multimodal_scene_cuts", "emb_knn_classify",
-    "text_langid_confusion", "text_repetition", "text_contamination",
-    "text_vocab_coverage", "dedup_spans", "text_ngram_novelty",
-    "text_pmi_pairs", "text_pii_redact",
-    "bpe_merge_candidates", "events_value_deciles",
-    "events_value_minmax_norm",
-    # round-5 window: the 47 green rows of CORRECTNESS_r05.json (the
-    # full _R5_WINDOW minus the three HUGEINT-oracle hash-fails —
-    # events_bounce_rate / events_cart_abandonment / text_hapax_rate —
-    # which retry in the round-6 window below after the
-    # CAST(... AS BIGINT) oracle fixes)
-    "events_user_entropy", "text_token_entropy",
-    "emb_norm_deciles", "events_props_schema_infer",
-    "events_heavy_users_cms", "events_kmv_overlap",
-    "events_median_quickselect", "events_rolling_wau",
-    "events_user_streaks", "events_gap_histogram", "events_peak_rate",
-    "events_ewma_int", "events_funnel_windowed",
-    "events_type_share_drift", "events_anomaly_mad",
-    "events_velocity_features", "events_user_lifecycle",
-    "events_ab_test_cuped",
-    "events_new_vs_returning",
-    "events_retention_day_n", "events_wau_stickiness",
-    "events_session_depth_histogram", "events_trimmed_mean",
-    "events_median_kvs", "profile_documents",
-    "text_tokenizer_fertility", "text_zipf_curve",
-    "docs_lang_source_chi2", "docs_source_divergence_tv",
-    "orders_monthly_growth",
-    "events_asof_click_attrib", "orders_repeat_cohort",
-    "events_trending_streamed", "lineitem_price_discount_corr",
-    "orders_customer_migration", "parts_abc_classification",
-    "orders_priority_mix", "orders_interpurchase_gaps",
-    "events_value_benford", "emb_ivf_cell_balance", "emb_knn_margin",
-    "emb_centroid_distances", "dedup_band_tuning",
-    "docs_simhash_bit_balance", "docs_dup_rate_by_source",
-    "dedup_degree_histogram", "docs_shingle_saturation",
-    # round-6 window: all 50 rows of CORRECTNESS_r06.json green (the
-    # first fully green window since r1 — including the 3 r5 HUGEINT
-    # retries and the latent events_survival_km fix)
-    "events_bounce_rate", "events_cart_abandonment", "text_hapax_rate",
-    "events_dow_hour_heatmap", "text_length_histogram",
-    "events_asof_forward_sla", "events_salted_user_join",
-    "text_readability", "emb_srp_candidates", "basket_rules",
-    "events_sliding_streamed", "multimodal_dedup_ahash",
-    "graph_assortativity", "events_cohort_ltv_curve",
-    "events_duplicate_purchases", "parts_supplier_hhi",
-    "events_hll_sliding", "events_bootstrap_ci",
-    "docs_tfidf_cosine_pairs", "events_quantile_sliding",
-    "iter_logreg", "graph_link_prediction", "events_jsonl_roundtrip",
-    "users_feature_matrix", "train_export_shards",
-    "events_linreg_trend", "events_diff_in_diff",
-    "events_changepoint_mean", "events_survival_km",
-    "orders_gini_revenue", "privacy_k_anonymity",
-    "dedup_minhash_calibration", "text_lm_perplexity",
-    "docs_naive_bayes_lang", "events_window_parity", "emb_silhouette",
-    "text_rake_keywords", "graph_label_propagation", "orders_mix_shift",
-    "events_schema_drift", "events_acf_daily", "text_token_burstiness",
-    "emb_gram_matrix", "graph_modularity", "events_forecast_snaive",
-    "text_simpson_diversity", "events_mann_whitney",
-    "events_qte_deciles", "docs_source_divergence_js",
-    "events_rolling_corr",
-    # round-7 window: all 50 rows of CORRECTNESS_r07.json green
-    # (second consecutive fully-green window)
-    "orders_lines_histogram", "graph_degree_distribution",
-    "text_heaps_curve", "events_slo_burn", "events_compaction_plan",
-    "events_audience_overlap",
-    "graph_clustering_coefficient", "graph_reciprocity",
-    "events_spectral_daily", "integrity_audit", "events_decision_stump",
-    "users_ols_normal_equations", "orders_backlog_aging",
-    "customer_snapshot_diff", "emb_quantization_error",
-    "privacy_generalization_ladder", "events_power_analysis",
-    "events_session_gap_sensitivity", "events_bot_flags",
-    "orders_fulfillment_lag", "emb_centroid_drift",
-    "basket_apriori_triples", "events_encoding_advisor",
-    "search_inverted_index", "search_phrase_query", "graph_hits",
-    "events_holt_linear", "events_hazard_daily",
-    "multimodal_image_phash", "emb_pca_two", "text_longest_repeat",
-    "search_bm25_topk", "events_attribution_full_streamed",
-    "train_curriculum_order", "privacy_t_closeness",
-    "events_holt_winters", "events_ks_test", "graph_ktruss",
-    "events_shapley_attribution", "events_peak_prominence",
-    "sim_ivf_recall",
-    "lineitem_zonemap_prune", "events_forecast_reconciled",
-    "events_psi_drift", "customer_record_linkage",
-    "graph_random_walks", "parts_xyz_classification",
-    "bpe_learn_merges",
-    "emb_random_projection", "graph_kcore",
-    # round-8 window: all 50 rows of CORRECTNESS_r08.json green (third
-    # consecutive fully-green window) — the 8 backlog names, the 3
-    # watermark-observability additions (the sanctioned VERDICT r7 ask
-    # #3 cap), and the customer_record_linkage re-check.  This closes
-    # the ledger: every one of the 304 registered queries now has a
-    # driver CORRECTNESS green row.  _DRIVER_CHECKED count: 304.
-    "events_ab_srm_check", "events_factorial_interaction",
-    "lineitem_returns_wilson", "orders_dormancy_reactivation",
-    "events_mde_curve", "events_attrib_window_sweep",
-    "events_ratio_metric_delta", "events_watermark_late_census",
-    "events_watermark_lag_curve", "events_watermark_drop_audit",
-    "events_drop_audit_streamed",
-})
-
-
-# The ROUND-12 gate window: the 50 LONGEST-UNCHECKED driver greens,
-# re-derived from all eleven CORRECTNESS_r{01..11}.json files (latest
-# round each name appeared in, alphabetical tie-break within a round)
-# — exactly the continuity note the r11 window left behind: the 16
-# names that slid past the r11 50-entry check behind the 22 rechecks
-# (the 2 remaining r4 rows + the 14 alphabetically-first unchanged r5
-# rows) lead the window, then the remaining 18 r5 rows, then the 16
-# oldest r6 rows.  After this round lands green, no registry row is
-# older than r6.
-_R12_WINDOW = (
-    # the 2 remaining r4 rows (slid from the r11 check)
-    "train_temperature_mix", "users_spearman_freq_value",
-    # the 32 remaining r5 rows (14 slid from r11 + 18 next-oldest)
-    "emb_norm_deciles", "events_asof_click_attrib", "events_ewma_int",
-    "events_gap_histogram", "events_heavy_users_cms",
-    "events_median_kvs", "events_median_quickselect",
-    "events_new_vs_returning", "events_peak_rate",
-    "events_props_schema_infer", "events_retention_day_n",
-    "events_rolling_wau", "events_session_depth_histogram",
-    "events_trending_streamed", "events_trimmed_mean",
-    "events_type_share_drift", "events_user_entropy",
-    "events_user_lifecycle", "events_user_streaks",
-    "events_value_benford", "events_velocity_features",
-    "events_wau_stickiness", "lineitem_price_discount_corr",
-    "orders_customer_migration", "orders_interpurchase_gaps",
-    "orders_monthly_growth", "orders_priority_mix",
-    "orders_repeat_cohort", "parts_abc_classification",
-    "profile_documents", "text_tokenizer_fertility", "text_zipf_curve",
-    # the 16 oldest r6 rows
-    "docs_source_divergence_js", "emb_gram_matrix", "events_acf_daily",
-    "events_asof_forward_sla", "events_bootstrap_ci",
-    "events_bounce_rate", "events_cart_abandonment",
-    "events_changepoint_mean", "events_cohort_ltv_curve",
-    "events_diff_in_diff", "events_dow_hour_heatmap",
-    "events_duplicate_purchases", "events_forecast_snaive",
-    "events_hll_sliding", "events_jsonl_roundtrip",
-    "events_linreg_trend",
-)
-
-
-# Driver-green queries whose PLAN changed this round, so their stale
-# driver row is not enough — they re-enter the window ahead of the
-# re-green block for a fresh row against the (unchanged) oracles.
-# Round 12 changed plans in three groups (OPTIMIZATION_r12.md):
-# - the exscan Python-boundary removal (operators/reduce.py window
-#   form; orders_pareto_share/orders_gini_revenue additionally
-#   rewritten to pure codegen ranking with no per-row scan at all);
-# - graph_modularity now shares ONE canonical edge checkpoint with
-#   the LPA label rounds (_lpa_labels) instead of rebuilding the
-#   generator+canonicalize pipeline;
-# - five r11 "kept-for-scale" rewrites REVERTED to their pre-r11
-#   forms after the sf10 A/B measured the old form faster at both
-#   scales (VERDICT r11 ask #3's measure-or-revert rule).
-# With 12 re-checks ahead of the 50-name window, the window's last 12
-# names (events_cohort_ltv_curve through events_linreg_trend) slide
-# to the next window's head if there is ever another round.
-_R12_RECHECK: tuple[str, ...] = (
-    # exscan family
-    "orders_pareto_share", "orders_gini_revenue",
-    "parts_abc_classification", "events_concurrent_sessions",
-    "events_ks_test", "events_watermark_late_census",
-    # shared-canon modularity
-    "graph_modularity",
-    # sf10-adjudicated reverts
-    "events_forecast_reconciled", "events_anomaly_mad",
-    "text_heaps_curve", "docs_source_divergence_tv",
-    "privacy_t_closeness",
-)
-
-
-def _rotate_for_driver_window(queries):
-    """Order registry entries so the driver's 50-entry check hits the
-    names that need a row most: any never-driver-checked query first
-    (none exist while the registry stays frozen — this is a safety net
-    for sanctioned additions), then changed-this-round re-checks, then
-    the pinned round-12 re-green window (the 50 oldest rows; with an
-    empty re-check list the window fits the 50-entry check exactly —
-    any re-check added mid-round slides the window tail to the next
-    round, so order slid names into the next window's head), then the
-    rest in reverse registration order."""
-    fresh = [n for n in queries if n not in _DRIVER_CHECKED]
-    recheck = [n for n in _R12_RECHECK
-               if n in queries and n not in set(fresh)]
-    front = fresh + recheck
-    pinned = [n for n in _R12_WINDOW
-              if n in queries and n not in set(front)]
-    in_front = set(front) | set(pinned)
-    stale = [n for n in reversed(list(queries))
-             if n in _DRIVER_CHECKED and n not in in_front]
-    return {n: queries[n] for n in front + pinned + stale}
+    for modname in PLAN_MODULES:
+        mod = importlib.import_module(modname)
+        for merged, part in ((queries, mod.QUERIES), (oracles, mod.ORACLE_SQL)):
+            dup = sorted(merged.keys() & part.keys())
+            if dup:
+                raise ValueError(f"{modname} registers names already "
+                                 f"registered by another module: {dup}")
+            merged.update(part)
+    head = set(_DRIVER_HEAD)
+    order = _DRIVER_HEAD + tuple(n for n in reversed(queries) if n not in head)
+    return ({n: queries[n] for n in order},
+            {n: oracles[n] for n in order if n in oracles})
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -2,13 +2,37 @@
 
 Cheap, Spark-free checks that catch wiring drift: a query registered
 without its oracle, a bench name that doesn't resolve, duplicate names
-across plan modules silently shadowing each other.
+across plan modules silently shadowing each other, a broken plan module
+silently shrinking the registry.
 """
 
+import glob
+import importlib
+import json
 import os
+import sys
+
+import pytest
 
 import __spark_entry__ as entry
 import bench
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: the round-12 plan changes lead _DRIVER_HEAD (OPTIMIZATION_r12.md)
+_R12_RECHECKS = 12
+
+
+def _correctness_rows() -> dict[int, list[str]]:
+    """Round number -> row names (file key order) of every committed
+    CORRECTNESS_r*.json."""
+    rows = {}
+    for f in sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))):
+        rnd = int(os.path.basename(f).split("_r")[1].split(".")[0])
+        with open(f) as fh:
+            rows[rnd] = list(json.load(fh))
+    assert rows, "no CORRECTNESS files — rotation has no evidence base"
+    return rows
 
 
 def test_every_oracle_has_a_query():
@@ -25,35 +49,29 @@ def test_every_query_has_an_oracle():
 
 def test_bench_names_resolve():
     qs = entry.queries()
-    missing = [n for n in bench.BENCH_QUERIES if n not in qs]
-    assert not missing, missing
+    for names in (bench.HEAVY_QUERIES, bench.SUMMARY_QUERIES):
+        assert len(names) == len(set(names))
+        missing = [n for n in names if n not in qs]
+        assert not missing, missing
+
+
+def test_bench_rejects_unregistered_heavy_name(monkeypatch):
+    """bench.main must refuse a HEAVY_QUERIES name the registry lacks
+    before it starts a Spark session, not skip it."""
+    def no_spark(*args, **kwargs):
+        raise AssertionError("bench started Spark before checking names")
+
+    monkeypatch.setattr("kmr_spark.session.get_spark", no_spark)
+    monkeypatch.setattr(bench, "HEAVY_QUERIES",
+                        [*bench.HEAVY_QUERIES, "no_such_query"])
+    with pytest.raises(ValueError, match="no_such_query"):
+        bench.main()
 
 
 def test_no_duplicate_names_across_modules():
     """QUERIES dicts merged in __spark_entry__ must not shadow each
     other: the union's size equals the sum of the parts."""
-    from kmr_spark.llm_ops import registry
-    from kmr_spark.plans import (analytics, basket, behavior, bloomjoin,
-                                 corpusstats, diagnostics, generate, graphs,
-                                 graysort, incremental, inference, iterative,
-                                 layout, linalg, linkage, privacy,
-                                 quality, rfm, watermark,
-                                 robust, sampling, search, semistruct,
-                                 sketches, timeseries, tpch, tpch_extra,
-                                 training, trends, valuation, winfuncs,
-                                 wordcount)
-
-    parts = [tpch.QUERIES, tpch_extra.QUERIES, wordcount.QUERIES,
-             graysort.QUERIES, analytics.QUERIES, iterative.QUERIES,
-             linalg.QUERIES, generate.QUERIES, sampling.QUERIES,
-             layout.QUERIES, graphs.QUERIES, incremental.QUERIES,
-             semistruct.QUERIES, sketches.QUERIES, timeseries.QUERIES,
-             quality.QUERIES, basket.QUERIES, rfm.QUERIES,
-             training.QUERIES, bloomjoin.QUERIES, behavior.QUERIES,
-             diagnostics.QUERIES, valuation.QUERIES, robust.QUERIES,
-             corpusstats.QUERIES, trends.QUERIES, inference.QUERIES,
-             privacy.QUERIES, winfuncs.QUERIES, search.QUERIES,
-             linkage.QUERIES, watermark.QUERIES, registry.QUERIES]
+    parts = [importlib.import_module(m).QUERIES for m in entry.PLAN_MODULES]
     total = sum(len(p) for p in parts)
     merged = {}
     for p in parts:
@@ -61,62 +79,75 @@ def test_no_duplicate_names_across_modules():
     assert len(merged) == total
     assert set(merged) == set(entry.queries())
 
+
+def test_plan_module_import_error_propagates(monkeypatch):
+    """A plan module that fails to import must fail the registry, not
+    silently drop its queries."""
+    monkeypatch.setitem(sys.modules, "kmr_spark.plans.wordcount", None)
+    with pytest.raises(ImportError):
+        entry.queries()
+
+
+def test_duplicate_name_across_modules_raises(monkeypatch):
+    from kmr_spark.plans import tpch, wordcount
+
+    monkeypatch.setitem(wordcount.QUERIES, "tpch_q9", tpch.QUERIES["tpch_q9"])
+    with pytest.raises(ValueError, match="tpch_q9"):
+        entry.queries()
+
+
+def test_rmat_override_guard(monkeypatch):
+    """A KMR_RMAT_* override outside the scale sweep fails the registry;
+    the sweep declares itself with KMR_RMAT_SWEEP."""
+    monkeypatch.delenv("KMR_RMAT_SWEEP", raising=False)
+    monkeypatch.setenv("KMR_RMAT_EDGES", "1000")
+    with pytest.raises(RuntimeError, match="KMR_RMAT_EDGES"):
+        entry.queries()
+    monkeypatch.setenv("KMR_RMAT_SWEEP", "1")
+    assert len(entry.queries()) >= 301
+
+
 def test_driver_gate_rotation_invariants():
-    """The driver checks exactly the FIRST 50 registry entries; these
-    invariants make the round-12 gate deterministic:
-    - the ledger is closed (every registered query is in
-      _DRIVER_CHECKED), so any never-checked query — none exist while
-      the registry stays frozen — would iterate first as a safety net,
-    - the pinned re-green window (_R12_WINDOW, the 50 longest-unchecked
-      rows) fills the driver's 50-entry check exactly,
-    - a sanctioned post-freeze addition would shrink the re-green
-      window from the back rather than overflow the 50."""
-    qs = entry.queries()
-    names = list(qs)
+    """The driver checks exactly the FIRST 50 registry entries:
+    - the registry starts with _DRIVER_HEAD, whose first 50 names are
+      the rows of CORRECTNESS_r12.json in order,
+    - every other name follows in reverse registration order,
+    - the ledger is closed: every registered query has a driver row in
+      some CORRECTNESS_r*.json, and every row names a registered query."""
+    names = list(entry.queries())
     assert len(names) >= 301, f"registry must not shrink below 301, got {len(names)}"
-    # ledger closed: no registered query lacks a driver row
-    unchecked = [n for n in names if n not in entry._DRIVER_CHECKED]
-    assert not unchecked, f"never-driver-checked queries exist: {unchecked}"
-    assert len(entry._R12_WINDOW) == 50
-    assert len(set(entry._R12_WINDOW)) == 50
-    assert set(entry._R12_WINDOW) <= entry._DRIVER_CHECKED
-    # changed-plan re-checks iterate first; the re-green window fills
-    # the rest of the driver's 50-entry check.  A re-check that is
-    # NOT in the window pushes the window tail out to the next
-    # round's window head.
-    rc = [n for n in entry._R12_RECHECK if n in qs]
-    assert set(rc) <= entry._DRIVER_CHECKED
-    assert names[:len(rc)] == rc
-    expected = rc + [n for n in entry._R12_WINDOW if n not in set(rc)]
-    assert tuple(names[:50]) == tuple(expected[:50])
-    assert len(entry._DRIVER_CHECKED) == len(names)
+    head = list(entry._DRIVER_HEAD)
+    assert len(set(head)) == len(head) >= 50
+    rows = _correctness_rows()
+    assert head[:50] == rows[12]
+    assert names[:len(head)] == head
+    registered = [n for m in entry.PLAN_MODULES
+                  for n in importlib.import_module(m).QUERIES]
+    assert names[len(head):] == [n for n in reversed(registered)
+                                 if n not in set(head)]
+    checked = {n for r in rows.values() for n in r}
+    assert set(names) == checked, (sorted(set(names) - checked),
+                                   sorted(checked - set(names)))
 
 
 def test_r12_window_is_the_50_longest_unchecked():
-    """The window is not hand-picked: it must equal the 50 names with
-    the OLDEST latest-check round across every committed
-    CORRECTNESS_r*.json, alphabetical tie-break within a round.  This
-    re-derivation is exactly how the judge audits the rotation; pinning
-    it as a test means a stale window (e.g. copied forward a round)
-    fails loudly instead of silently re-greening fresh rows."""
-    import glob
-    import json
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    """The head is not hand-picked: after its round-12 re-checks it must
+    equal, in order, the names with the OLDEST latest-check round across
+    CORRECTNESS_r01..r11 (alphabetical tie-break within a round),
+    skipping the re-checks.  This re-derivation is how the rotation is
+    audited; a stale head (e.g. copied forward a round) fails loudly
+    instead of silently re-greening fresh rows."""
     latest = {}
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    assert files, "no CORRECTNESS files — rotation has no evidence base"
-    for f in files:
-        rnd = int(os.path.basename(f).split("_r")[1].split(".")[0])
+    for rnd, names in _correctness_rows().items():
         if rnd >= 12:
             continue  # the window was derived from rounds 1-11 evidence
-        for name in json.load(open(f)):
+        for name in names:
             latest[name] = max(rnd, latest.get(name, 0))
-    oldest = sorted(latest, key=lambda n: (latest[n], n))[:50]
-    assert set(entry._R12_WINDOW) == set(oldest), (
-        sorted(set(entry._R12_WINDOW) - set(oldest)),
-        sorted(set(oldest) - set(entry._R12_WINDOW)),
-    )
+    head = entry._DRIVER_HEAD
+    rechecks = set(head[:_R12_RECHECKS])
+    oldest = [n for n in sorted(latest, key=lambda n: (latest[n], n))
+              if n not in rechecks]
+    assert list(head[_R12_RECHECKS:]) == oldest[:len(head) - _R12_RECHECKS]
 
 
 def test_bench_summary_queries_fit_driver_tail():
@@ -124,8 +155,6 @@ def test_bench_summary_queries_fit_driver_tail():
     2000-byte stdout tail (BENCH_r03.json shows what overflow does):
     SUMMARY_QUERIES must resolve, stay unique, and — encoded with
     worst-case realistic values — fit the byte budget."""
-    import json
-
     qs = entry.queries()
     assert len(bench.SUMMARY_QUERIES) == len(set(bench.SUMMARY_QUERIES))
     missing = [n for n in bench.SUMMARY_QUERIES if n not in qs]
@@ -141,15 +170,3 @@ def test_bench_summary_queries_fit_driver_tail():
     }
     assert len(json.dumps(line, separators=(",", ":"))) \
         <= bench._SUMMARY_LINE_BUDGET
-
-
-def test_bench_covers_full_registry():
-    """bench.py is the perf surface the driver records per round; a
-    registered query absent from BENCH_QUERIES would silently escape
-    perf tracking (r4 ask #4 made the list full-coverage; keep it so).
-    The list is append-only for round-comparability, so order is not
-    asserted — only exact set equality and uniqueness."""
-    qs = entry.queries()
-    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES))
-    assert set(bench.BENCH_QUERIES) == set(qs), (
-        set(bench.BENCH_QUERIES) ^ set(qs))
