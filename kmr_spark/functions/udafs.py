@@ -29,12 +29,15 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 
+from kmr_spark.operators.pyworker import skip_unchanged_zip_rereads
+
 TRIM_FRAC = 0.1
 
 _cache: dict[str, object] = {}
 
 
 def _trimmed_mean_impl(v: pd.Series) -> float:
+    skip_unchanged_zip_rereads()
     s = v.dropna().sort_values().reset_index(drop=True)
     n = len(s)
     if n == 0:
@@ -46,6 +49,7 @@ def _trimmed_mean_impl(v: pd.Series) -> float:
 
 
 def _trimmed_sum_impl(v: pd.Series) -> int:
+    skip_unchanged_zip_rereads()
     s = v.dropna().sort_values().reset_index(drop=True)
     n = len(s)
     if n == 0:
@@ -57,6 +61,7 @@ def _trimmed_sum_impl(v: pd.Series) -> int:
 
 
 def _arrow_count_impl(v: pd.Series) -> int:
+    skip_unchanged_zip_rereads()
     return len(v)
 
 

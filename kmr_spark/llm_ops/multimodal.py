@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kmr_spark.operators.pyworker import skip_unchanged_zip_rereads
+
 #: metadata schema carried next to every binary payload
 MEDIA_META_SCHEMA = (
     "media_id long, kind string, mime string, width int, height int, "
@@ -71,6 +73,7 @@ def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
             "pass fake=True for the deterministic test decoder")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             payloads = pdf["payload"]
             yield pd.DataFrame({
@@ -101,6 +104,7 @@ def resize_images(df: DataFrame, width: int, height: int, fake: bool = False) ->
     target = width * height
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             pdf = pdf[pdf["kind"] == "image"]
             out = pdf["payload"].map(
@@ -123,6 +127,7 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 64, fake: bool = False) ->
             "deterministic stand-in")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             pdf = pdf[pdf["kind"] == "video"]
             ids, idxs, frames = [], [], []
@@ -169,6 +174,7 @@ def encode_docs_as_bmp(docs: DataFrame) -> DataFrame:
     can predict every decoded field without a binary parser."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             payloads = []
             for did, tlen in zip(pdf["doc_id"], pdf["tlen"]):
@@ -214,6 +220,7 @@ def decode_bmp(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     Raises on malformed payloads rather than guessing."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
                 "doc_id", "width", "height", "bpp", "stride",
@@ -240,6 +247,7 @@ def encode_docs_as_gradient_bmp(docs: DataFrame) -> DataFrame:
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             payloads = []
             for did, tlen in zip(pdf["doc_id"], pdf["tlen"]):
@@ -276,6 +284,7 @@ def resize_bmp_nn(df: DataFrame, out_w: int, out_h: int,
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             ids, payloads = [], []
             for did, payload in zip(pdf["doc_id"], pdf[payload_col]):
@@ -364,6 +373,7 @@ def ahash_bmp(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
                 "doc_id", "ahash_hi", "ahash_lo", "n_ones")}
@@ -464,6 +474,7 @@ def encode_docs_as_wav(docs: DataFrame) -> DataFrame:
     walk the chunk list like a real reader."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             payloads = []
             for did, tlen in zip(pdf["doc_id"], pdf["tlen"]):
@@ -525,6 +536,7 @@ def decode_wav(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     and the exact sample sum. Raises on malformed payloads."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
                 "doc_id", "sample_rate", "channels", "bits",
@@ -593,6 +605,7 @@ def encode_docs_as_tone_wav(docs: DataFrame) -> DataFrame:
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             payloads = []
             for did, tlen in zip(pdf["doc_id"], pdf["tlen"]):
@@ -633,6 +646,7 @@ def audio_frame_features(df: DataFrame, frame_len: int = AUDIO_FRAME_LEN,
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
                 "doc_id", "frame_idx", "n_samples", "energy",
@@ -703,6 +717,7 @@ def encode_docs_as_video(docs: DataFrame) -> DataFrame:
     predict every sampled frame's decode."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             payloads = []
             for did, tlen in zip(pdf["doc_id"], pdf["tlen"]):
@@ -737,6 +752,7 @@ def sample_video_frames(df: DataFrame, every_n: int = 2,
     the point of frame sampling at 100 TB."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
                 "doc_id", "frame_idx", "width", "height", "pixel_sum")}
@@ -892,6 +908,7 @@ def extract_bmp_features(df: DataFrame, payload_col: str = "payload") -> DataFra
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
                 ["doc_id", "width", "height", "px_mean"]
@@ -1095,6 +1112,7 @@ def phash_bmp(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         PHASH_SIDE, PHASH_SIDE)[:PHASH_BLOCK]  # (4, 8), rows = u
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
                 "doc_id", "phash", "n_ones")}

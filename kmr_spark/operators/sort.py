@@ -213,13 +213,15 @@ def ranking(df: DataFrame, order: list[str | Column],
 
     Callers that compose the result into a wider plan (a ``union``
     above all) must pass ``materialize=True`` (partition-id caveat,
-    see :func:`_exscan`). That localCheckpoints the FULL ranked frame,
-    right only when the ranked rows themselves are the result
-    (graysort). A caller that immediately REDUCES the ranked frame
-    (zone maps, deciles) must not checkpoint the corpus (guide §5: at
-    60M rows the checkpointed blocks OOM an 8g heap): pass
-    ``cache_registry`` instead, aggregate while the sort cache is live,
-    and ``materialize_release(small_result, *registry)``.
+    see :func:`_exscan`). That localCheckpoints the FULL ranked frame
+    in storage memory, right only for a small frame. A caller that
+    immediately REDUCES the ranked frame (zone maps, deciles) must not
+    checkpoint the corpus (guide §5: at 60M rows the checkpointed
+    blocks OOM an 8g heap): pass ``cache_registry`` instead, aggregate
+    while the sort cache is live, and
+    ``materialize_release(small_result, *registry)``. A corpus-sized
+    result (graysort) passes ``cache_registry`` too and checkpoints its
+    rows to local disk before releasing the registry.
     """
     return _exscan(df, order, "count", materialize=materialize,
                    cache_registry=cache_registry)

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from kmr_spark.operators.sort import ranking
 from kmr_spark.session import load_tables, widen
@@ -32,7 +33,19 @@ def graysort_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = li.select(
         F.md5(F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"))).alias("sortkey")
     ).persist()
-    return ranking(keyed, ["sortkey"]).select("rank", "sortkey")
+    # The ranked rows are the result, as large as the corpus: checkpoint
+    # them to local disk, then release both caches, on failure too. The
+    # in-memory checkpoint of ranking(materialize=True) held 1.66 GB of
+    # storage memory at 6M rows against 0.34 GB for the two caches; on
+    # disk the peak stays at the caches'.
+    caches = [keyed]
+    try:
+        ranked = ranking(keyed, ["sortkey"], cache_registry=caches)
+        return ranked.select("rank", "sortkey").localCheckpoint(
+            storageLevel=StorageLevel.DISK_ONLY)
+    finally:
+        for df in caches:
+            df.unpersist()
 
 
 GRAYSORT_SQL = """

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kmr_spark.session import load_tables
+from kmr_spark.session import load_tables, materialize_release
 
 # ------------------------------------------------------------------ PageRank
 
@@ -206,7 +206,9 @@ def kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in rows:
             new_cents[r["cluster"]][r["pos"]] = (float(r["s"]) / KM_Q) / r["n"]
         cents = new_cents
-    return emb.select("vec_id", _assign_expr(cents).alias("cluster")).orderBy("vec_id")
+    return materialize_release(
+        emb.select("vec_id", _assign_expr(cents).alias("cluster")).orderBy("vec_id"),
+        emb)
 
 
 def _kmeans_sql() -> str:

@@ -245,6 +245,20 @@ def invalidate_table_cache(spark: SparkSession, sf_dir: str | None = None) -> No
         cache.pop(os.path.realpath(sf_dir), None)
 
 
+def parquet_part_files(table_dir: str) -> list[str]:
+    """The data files of a Spark-written directory table, recursively
+    (partitioned layouts such as ``day=.../part-*`` included), in sorted
+    order. Names starting with ``_`` or ``.`` are skipped, files and
+    directories alike, as Spark's own file listing skips them:
+    ``_SUCCESS``, ``.crc`` checksums, ``_temporary``."""
+    found = []
+    for root, dirs, files in os.walk(table_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        found.extend(os.path.join(root, f) for f in sorted(files)
+                     if not f.startswith(("_", ".")))
+    return found
+
+
 def parquet_num_rows(sf_dir: str, table: str) -> int | None:
     """Row count of a driver parquet table from FILE METADATA only —
     no Spark job, ~ms.  Used to size :class:`sized_shuffle_partitions`
@@ -260,15 +274,8 @@ def parquet_num_rows(sf_dir: str, table: str) -> int | None:
         import pyarrow.parquet as pq
 
         if os.path.isdir(path):
-            # walk recursively so partitioned layouts (day=.../part-*)
-            # are counted, not silently reported as 0
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)).metadata.num_rows
-            return total
+            return sum(pq.ParquetFile(f).metadata.num_rows
+                       for f in parquet_part_files(path))
         return pq.ParquetFile(path).metadata.num_rows
     except Exception:
         return None

@@ -93,3 +93,49 @@ def test_kvs_python_stages_run_outside_repo_root(tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert "RESULT {'missing'} [(0, 36), (1, 44), (2, 52)]" in proc.stdout, (
         proc.stdout[-2000:], proc.stderr[-4000:])
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12),
+                    reason="CPython 3.12 re-reads zip directories lazily")
+def test_udaf_worker_skips_unchanged_pyspark_zip():
+    """A Python worker that has run a functions.udafs UDAF twice no
+    longer re-reads the unchanged pyspark.zip when importlib
+    invalidates its caches before a task. One task slot, so every task
+    runs in the same reused worker; the probe is the next task."""
+    script = textwrap.dedent("""
+        import os
+        from pyspark.sql import functions as F
+        from kmr_spark.functions.udafs import arrow_count, trimmed_sum
+        from kmr_spark.session import get_spark
+
+        spark = get_spark("udaf_zip_rereads", shuffle_partitions=1)
+        df = spark.range(40).select((F.col("id") % 4).alias("g"), "id")
+        for _ in range(2):
+            df.groupBy("g").agg(trimmed_sum(F.col("id")),
+                                arrow_count(F.col("id"))).collect()
+
+        def probe(batches):
+            import importlib
+            import zipimport
+
+            reads = []
+            real = zipimport._read_directory
+            zipimport._read_directory = lambda p: reads.append(p) or real(p)
+            try:
+                importlib.invalidate_caches()
+            finally:
+                zipimport._read_directory = real
+            seen = ",".join(sorted({os.path.basename(p) for p in reads}))
+            for pdf in batches:
+                yield pdf.assign(value=seen or "none")
+
+        rows = spark.range(1).selectExpr("id", "'' AS value").mapInPandas(
+            probe, "id long, value string").collect()
+        print("REREAD", rows[0].value)
+        spark.stop()
+    """)
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run([sys.executable, "-c", script], cwd=REPO, env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "REREAD none" in proc.stdout, (proc.stdout[-2000:], proc.stderr[-2000:])

@@ -12,7 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from kmr_spark.session import (invalidate_table_cache, load_tables,
-                               parquet_num_rows)
+                               parquet_num_rows, parquet_part_files)
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MID = "/root/testdata/sf0.01"
@@ -64,5 +64,12 @@ def test_parquet_num_rows_flat_and_partitioned(tmp_path):
         d = root / f"day={day}"
         d.mkdir(parents=True)
         pq.write_table(pa.table({"x": list(range(rows))}), d / "part-0.parquet")
+    # what Spark and Hadoop leave beside the data is not part of the table
+    (root / "_SUCCESS").write_bytes(b"")
+    (root / "day=1" / ".part-0.parquet.crc").write_bytes(b"crc")
+    (root / "_temporary" / "0").mkdir(parents=True)
+    pq.write_table(pa.table({"x": [1, 2]}), root / "_temporary" / "0" / "part-9.parquet")
+    assert parquet_part_files(str(root)) == [
+        str(root / "day=1" / "part-0.parquet"), str(root / "day=2" / "part-0.parquet")]
     assert parquet_num_rows(str(tmp_path), "t") == 7
     assert parquet_num_rows(str(tmp_path), "missing") is None

@@ -3,6 +3,7 @@ multimodal plumbing."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -328,3 +329,100 @@ def test_stream_events_reads_directory_tables(spark, tmp_path):
     d = sorted(map(tuple, from_dir.collect()))
     f = sorted(map(tuple, from_file.collect()))
     assert d and d == f
+
+
+def _events_with_ts(tmp_path, name, ts_type, **write_opts):
+    """A copy of the sf0.001 events table, written by pyarrow with ``ts``
+    stored as ``ts_type``; returns its sf directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(SF_SMALL, "events.parquet"))
+    i = table.schema.get_field_index("ts")
+    table = table.set_column(i, "ts", table["ts"].cast(ts_type))
+    sf = tmp_path / name
+    os.makedirs(sf)
+    pq.write_table(table, str(sf / "events.parquet"), **write_opts)
+    return str(sf)
+
+
+def test_footer_ts_dtype_matches_spark_reader(spark, tmp_path):
+    """parquet_ts_dtype reads one footer with pyarrow; it must name the
+    type Spark's own batch read gives ``ts``, for every way a table can
+    store it."""
+    import pyarrow as pa
+
+    from kmr_spark.streaming.windows import parquet_ts_dtype
+
+    tables = {
+        "nanos": _events_with_ts(tmp_path, "nanos", pa.timestamp("ns")),
+        "naive_micros": _events_with_ts(tmp_path, "naive", pa.timestamp("us")),
+        "utc_micros": _events_with_ts(tmp_path, "utc", pa.timestamp("us", tz="UTC")),
+        "int96": _events_with_ts(tmp_path, "int96", pa.timestamp("us"),
+                                 use_deprecated_int96_timestamps=True),
+        "testdata": SF_SMALL,
+    }
+    spark_dir = tmp_path / "spark_dir"
+    os.makedirs(spark_dir)
+    (spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
+     .repartition(3).write.parquet(str(spark_dir / "events.parquet")))
+    tables["spark_dir"] = str(spark_dir)
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    try:
+        for infer_ntz in (True, False):
+            spark.conf.set(key, str(infer_ntz).lower())
+            for name, sf in tables.items():
+                path = os.path.join(sf, "events.parquet")
+                want = dict(spark.read.parquet(path).dtypes)["ts"]
+                got = parquet_ts_dtype(path, infer_ntz=infer_ntz)
+                assert got == want, (name, infer_ntz, got, want)
+    finally:
+        spark.conf.set(key, old)
+    assert parquet_ts_dtype(os.path.join(tables["nanos"], "events.parquet")) == "bigint"
+    text = _events_with_ts(tmp_path, "text", pa.string())
+    with pytest.raises(ValueError, match="not a timestamp"):
+        parquet_ts_dtype(os.path.join(text, "events.parquet"))
+
+
+def test_nanos_replay_matches_batch(spark, tmp_path):
+    """A TIMESTAMP(NANOS) table streams as long ns and normalizes to the
+    same windows as its batch twin."""
+    import pyarrow as pa
+
+    from kmr_spark.plans.analytics import events_tumbling_window
+    from kmr_spark.streaming.windows import (
+        run_available_now, stream_events, tumbling_counts_stream)
+
+    sf = _events_with_ts(tmp_path, "nanos", pa.timestamp("ns"))
+    got = run_available_now(tumbling_counts_stream(stream_events(spark, sf)),
+                            "tumbling_nanos_test", str(tmp_path / "ck"))
+    g = sorted(map(tuple, got.select(
+        "window_start", "event_type", "n", "sum_value").collect()))
+    b = sorted(map(tuple, events_tumbling_window(spark, sf).collect()))
+    assert g and g == b
+
+
+def test_state_partitions_floor_is_one_wave(tmp_path):
+    """The state-store floor is capped at the task slots, so the stateful
+    stage runs in one wave; an explicit lower floor (drop audit), the
+    bytes term and the cap are unchanged."""
+    from types import SimpleNamespace
+
+    from kmr_spark.streaming.windows import sized_state_partitions
+
+    def parts(slots, size, **kw):
+        with open(tmp_path / "events.parquet", "wb") as f:
+            f.truncate(size)  # sparse: the size is all that is read
+        stub = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=slots))
+        return sized_state_partitions(stub, str(tmp_path), **kw)
+
+    small = 2 << 20
+    assert [parts(s, small) for s in (4, 8, 32)] == [4, 8, 8]
+    assert [parts(s, small, floor=2, n_batches=33) for s in (4, 32)] == [2, 2]
+    assert parts(4, 20 * (32 << 20)) == 20   # bytes term
+    assert parts(4, 5000 * (32 << 20)) == 4096   # cap
+    assert parts(32, 40 * (32 << 20), n_batches=4) == 10
+    assert sized_state_partitions(None, str(tmp_path / "missing")) is None
