@@ -2,7 +2,8 @@
 """Benchmark every registered query.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS], timing the queries in ``queries()`` order.
+local[$SPARK_GRAFT_CPUS] (default: the CPUs the process may use),
+timing the queries in ``queries()`` order.
 Prints, in order: a repeated-run block for HEAVY_QUERIES
 ($SPARK_GRAFT_BENCH_REPEAT samples each, default 3 — set 1/0 to skip),
 the per-query detail line (also written to bench_detail.json), then

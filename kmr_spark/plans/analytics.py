@@ -859,14 +859,10 @@ def events_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "session_id", F.col("s_hi").alias("bus"),
         F.lit(-1).alias("delta"))).persist()
     try:
-        # the scan sorts the |boundaries| table (2 rows per session),
-        # not the event log — size its range partitioning to that
-        from kmr_spark.session import sized_shuffle_partitions
-        with sized_shuffle_partitions(spark, bounds.count()):
-            scanned = scan_distributed(
-                bounds, "delta",
-                [F.col("bus"), F.col("delta").desc(), F.col("user_id"),
-                 F.col("session_id")])
+        scanned = scan_distributed(
+            bounds, "delta",
+            [F.col("bus"), F.col("delta").desc(), F.col("user_id"),
+             F.col("session_id")])
     finally:
         bounds.unpersist()
     return (

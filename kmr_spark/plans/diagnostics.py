@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kmr_spark.operators.sort import ranking
-from kmr_spark.session import load_tables, sized_shuffle_partitions
+from kmr_spark.session import load_tables
 
 
 def skew_report_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,12 +38,7 @@ def skew_report_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = orders.groupBy(F.col("o_custkey").alias("k")).agg(
         F.count("*").alias("cnt")).persist()
     try:
-        # the rank sort runs over the |keys|-sized aggregate, not the
-        # table — size its shuffle to that (session-wide partitioning
-        # is sized for the corpus and would fan 200 near-empty tasks)
-        n_keys = counts.count()
-        with sized_shuffle_partitions(spark, n_keys):
-            ranked = ranking(counts, ["cnt", "k"], materialize=True)  # 0-based
+        ranked = ranking(counts, ["cnt", "k"], materialize=True)  # 0-based
     finally:
         counts.unpersist()
     n = F.count(F.lit(1))

@@ -598,7 +598,6 @@ def events_qte_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent-sum/count BIGINTs.
     """
     from kmr_spark.operators.sort import ntile_from_rank, ranking_per_group
-    from kmr_spark.session import sized_shuffle_partitions
 
     ev = load_tables(spark, sf_dir)["events"].filter(
         F.col("event_type") == "purchase")
@@ -608,11 +607,9 @@ def events_qte_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
         "event_id").persist()
     try:
-        n = base.count()
-        with sized_shuffle_partitions(spark, n):
-            ranked = ranking_per_group(
-                base, ["grp"], [F.col("cents"), F.col("event_id")],
-                materialize=True)
+        ranked = ranking_per_group(
+            base, ["grp"], [F.col("cents"), F.col("event_id")],
+            materialize=True)
     finally:
         base.unpersist()
     by_dec = (

@@ -14,12 +14,14 @@ a SparkSession configured for the engine's workload shape:
 - AQE on (runtime re-planning, skew-join splitting — subsumes KMR's manual
   ``kmr_shuffle_leveling_pair_count``, reference src/kmrmoreops.c:1074).
 - Arrow on (every Python-side UDF path is Arrow-batched, never per-row).
-- Shuffle partition count sized by env, not hard-coded, so the same code
-  runs on local[32] and on a 1000-executor cluster.
+- Shuffle partition count equal to the task slots (:func:`task_slots`),
+  not hard-coded; AQE coalesces each small shuffle's read side, so no
+  batch plan pins its own width.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 
@@ -80,62 +82,55 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
-class sized_shuffle_partitions:
-    """Context manager: pin ``spark.sql.shuffle.partitions`` to a
-    row-count-derived value for a block of small keyed jobs, restoring
-    the session default afterwards.
+@contextlib.contextmanager
+def sized_shuffle_partitions(spark: SparkSession, n_partitions: int | None):
+    """Pin ``spark.sql.shuffle.partitions`` to ``n_partitions`` for a
+    block, restoring the session value afterwards; ``None`` leaves the
+    session value alone.
 
-    Iterative loops (connected components, BFS, triangle census) run
-    many tiny shuffles over data that only shrinks; session-wide
-    partitioning sized for the corpus multiplies fixed task cost there
-    (measured 8.8s -> 6.7s on the sf0.1 cluster query). The derived
-    value is clamped to [floor, session default] — at real scale the
-    formula lands back on the default and this is a no-op. If the
-    session value is non-numeric, the manager is a no-op.
+    Only the streaming replay runners use it. Spark fixes a stateful
+    query's state-store count from this conf at its first micro-batch
+    and AQE does not re-plan micro-batches, so they pass a width derived
+    from their input bytes (``sized_state_partitions``). Batch plans need
+    no pin: AQE coalesces the read side of a small shuffle into as few
+    partitions as its bytes need, so a sub-MB aggregate or sort reads
+    back as one partition at any session width.
     """
+    if n_partitions is None:
+        yield
+        return
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
-    def __init__(self, spark: SparkSession, n_rows: int | None = None,
-                 rows_per_partition: int = 100_000, floor: int = 8,
-                 n_partitions: int | None = None):
-        """Derive the pinned count from ``n_rows``, or pin an explicit
-        ``n_partitions`` (the streaming replay runners pass a
-        bytes-derived value that may legitimately exceed the session
-        default). With neither, the manager is a no-op."""
-        self.spark = spark
-        try:
-            self.old = spark.conf.get("spark.sql.shuffle.partitions")
-            if n_partitions is not None:
-                self.n = n_partitions
-            elif n_rows is not None:
-                self.n = max(floor, min(int(self.old),
-                                        -(-n_rows // rows_per_partition)))
-            else:
-                self.n = None
-        except ValueError:
-            self.n = None
 
-    def __enter__(self):
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
+def task_slots() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run
+    on (its affinity mask where the OS has one)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus:
+        return int(cpus)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS, Windows)
+        return os.cpu_count() or 1
 
 
 def get_spark(app_name: str = "kmr_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or get) a SparkSession tuned for this engine.
 
-    ``shuffle_partitions`` defaults to ``SPARK_GRAFT_CPUS`` (local test rig)
-    but AQE coalesces small shuffles at runtime, so the static number only
-    sets an upper bound locally; on a real cluster it should be ~2-3x the
+    The local master runs :func:`task_slots` slots, and
+    ``shuffle_partitions`` defaults to the same number. AQE coalesces
+    small shuffles at runtime, so the static number only sets an upper
+    bound locally; on a real cluster it should be ~2-3x the
     executor-core count and AQE will handle the rest.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = task_slots()
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -261,13 +256,10 @@ def parquet_part_files(table_dir: str) -> list[str]:
 
 def parquet_num_rows(sf_dir: str, table: str) -> int | None:
     """Row count of a driver parquet table from FILE METADATA only —
-    no Spark job, ~ms.  Used to size :class:`sized_shuffle_partitions`
-    for pipelines that would otherwise need a blocking count/collect
-    just to pick a shuffle width (the count is advisory: the width
-    formula clamps to the session default at real scale, so an
-    estimate is as good as an exact count).  Returns None when the
-    path is missing or unreadable (callers fall back to the session
-    default width).
+    no Spark job, ~ms.  Stands in for a blocking count() where a
+    pipeline needs a table's cardinality up front (TF-IDF document
+    counts, the edit-distance join's salt count, the scale harness's
+    row table).  Returns None when the path is missing or unreadable.
     """
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:

@@ -30,7 +30,8 @@ import struct
 import sys
 
 import duckdb
-from pyspark.sql import SparkSession
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # DuckDB result-column types the driver's typed hash treats the same as
 # the corresponding Spark dtype.  Anything else — HUGEINT above all
@@ -70,11 +71,11 @@ def main() -> None:
         oracle_timeout = float(argv[i + 1])
         del argv[i:i + 2]
 
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("check-queries").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, "/root/repo")
+    from kmr_spark.session import get_spark
     import __spark_entry__ as e
+
+    spark = get_spark("check-queries")
+    spark.sparkContext.setLogLevel("ERROR")
 
     def fresh_connection():
         c = duckdb.connect()

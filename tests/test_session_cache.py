@@ -73,3 +73,37 @@ def test_parquet_num_rows_flat_and_partitioned(tmp_path):
         str(root / "day=1" / "part-0.parquet"), str(root / "day=2" / "part-0.parquet")]
     assert parquet_num_rows(str(tmp_path), "t") == 7
     assert parquet_num_rows(str(tmp_path), "missing") is None
+
+
+def test_task_slots_default_follows_cpu_affinity(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` a fresh session runs one task slot
+    and one shuffle partition per CPU the process may use, not a fixed
+    count; an explicit ``SPARK_GRAFT_CPUS`` still wins."""
+    import subprocess
+    import sys
+
+    from kmr_spark.session import task_slots
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert task_slots() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert task_slots() == len(os.sched_getaffinity(0))
+
+    # a child that pins itself to one CPU builds its own session (the
+    # test session is already built and getOrCreate would return it)
+    one_cpu = min(os.sched_getaffinity(0))
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_NO_LOCAL_MASTER")}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import os\n"
+            f"os.sched_setaffinity(0, {{{one_cpu}}})\n"
+            "from kmr_spark.session import get_spark\n"
+            "s = get_spark('slots')\n"
+            "print(s.sparkContext.master,"
+            " s.conf.get('spark.sql.shuffle.partitions'))\n"
+            "s.stop()\n")
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, env=env, check=True,
+        capture_output=True, text=True, timeout=300)
+    assert out.stdout.split()[-2:] == ["local[1]", "1"], out.stdout
