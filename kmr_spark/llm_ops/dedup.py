@@ -653,9 +653,9 @@ LEN_BAND = 16  # > MAX_EDITS, so the +-1-band join is recall-exact
 #: by hash(doc_id) % S, right side replicated to all S salts), with
 #: identical output.  The constant is only the metadata-unavailable
 #: fallback — the actual count is sized from corpus volume by
-#: :func:`_edit_join_salts`, the data-sized-not-constant-sized
-#: discipline of KMR's own kmr_shuffle_leveling_pair_count (reference
-#: src/kmrmoreops.c:1074):
+#: :func:`_edit_join_salts`, the same data-sized-not-constant-sized
+#: discipline as ``sized_shuffle_partitions`` (and KMR's own
+#: kmr_shuffle_leveling_pair_count, reference src/kmrmoreops.c:1074):
 #: the right side is replicated S-fold, so a fixed S=32 taxes small
 #: corpora 32x for parallelism they can't use (measured: most of the
 #: 2.7s -> 10.6s sf0.1 regression in round 10), while a large corpus

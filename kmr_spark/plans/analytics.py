@@ -852,19 +852,26 @@ def events_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "session_id")
         .agg(F.min("us").alias("s_lo"), (F.max("us") + 1).alias("s_hi"))
     )
-    bounds = spans.select(
-        "user_id", "session_id", F.col("s_lo").alias("bus"),
-        F.lit(1).alias("delta")
-    ).unionByName(spans.select(
-        "user_id", "session_id", F.col("s_hi").alias("bus"),
-        F.lit(-1).alias("delta"))).persist()
-    try:
-        scanned = scan_distributed(
-            bounds, "delta",
-            [F.col("bus"), F.col("delta").desc(), F.col("user_id"),
-             F.col("session_id")])
-    finally:
-        bounds.unpersist()
+    from kmr_spark.session import parquet_num_rows, sized_shuffle_partitions
+
+    # the scan sorts the |boundaries| table (2 rows per session), not
+    # the event log; pinned before the persist, which fixes the cache's
+    # width, and sized from an upper bound: one session per event
+    n_events = parquet_num_rows(sf_dir, "events")
+    with sized_shuffle_partitions(spark, 2 * n_events if n_events else None):
+        bounds = spans.select(
+            "user_id", "session_id", F.col("s_lo").alias("bus"),
+            F.lit(1).alias("delta")
+        ).unionByName(spans.select(
+            "user_id", "session_id", F.col("s_hi").alias("bus"),
+            F.lit(-1).alias("delta"))).persist()
+        try:
+            scanned = scan_distributed(
+                bounds, "delta",
+                [F.col("bus"), F.col("delta").desc(), F.col("user_id"),
+                 F.col("session_id")])
+        finally:
+            bounds.unpersist()
     return (
         scanned.select(
             F.timestamp_micros("bus").alias("t"), "user_id", "session_id",

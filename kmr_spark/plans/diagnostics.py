@@ -28,19 +28,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kmr_spark.operators.sort import ranking
-from kmr_spark.session import load_tables
+from kmr_spark.session import (load_tables, parquet_num_rows,
+                               sized_shuffle_partitions)
 
 
 def skew_report_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row skew profile of orders.o_custkey: n_keys, n_rows,
     max_cnt, avg_cnt, top1_share, gini."""
     orders = load_tables(spark, sf_dir)["orders"]
-    counts = orders.groupBy(F.col("o_custkey").alias("k")).agg(
-        F.count("*").alias("cnt")).persist()
-    try:
-        ranked = ranking(counts, ["cnt", "k"], materialize=True)  # 0-based
-    finally:
-        counts.unpersist()
+    # the rank sort runs over the |keys|-sized aggregate, not the table
+    # (session-wide partitioning would fan 200 near-empty tasks); pinned
+    # before the persist, which fixes the cache's width, and sized from
+    # an upper bound on the keys: |customer|
+    with sized_shuffle_partitions(
+            spark, parquet_num_rows(sf_dir, "customer")):
+        counts = orders.groupBy(F.col("o_custkey").alias("k")).agg(
+            F.count("*").alias("cnt")).persist()
+        try:
+            ranked = ranking(counts, ["cnt", "k"], materialize=True)  # 0-based
+        finally:
+            counts.unpersist()
     n = F.count(F.lit(1))
     sx = F.sum("cnt")
     six = F.sum((F.col("rank") + 1) * F.col("cnt"))  # 1-based rank * x

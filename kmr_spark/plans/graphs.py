@@ -28,7 +28,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kmr_spark.plans.generate import RMAT_RAW_SQL, rmat_raw_edges
-from kmr_spark.session import materialize_release
+from kmr_spark.session import materialize_release, sized_shuffle_partitions
+
+
+def _gen_edge_count() -> int:
+    """Row count of the R-MAT generator stream — known A PRIORI (the
+    generator is ``spark.range``-driven), honoring the scale harness's
+    ``KMR_RMAT_EDGES`` override.  The graph queries previously ran a
+    blocking ``count()`` job on the canonicalized edges purely to size
+    ``sized_shuffle_partitions``; the sizing formula only needs the
+    order of magnitude, and the raw stream size is a tight upper bound
+    on the deduped edge count, so the count job (plus its eager
+    materialization barrier) is pure fixed cost (guide §1.2: remove
+    passes you don't need).  Operators over ARBITRARY edge tables
+    (triangle_census, connected_components) keep the exact count path
+    when no hint is supplied."""
+    import os
+
+    from kmr_spark.plans.generate import N_EDGES
+
+    return int(os.environ.get("KMR_RMAT_EDGES", N_EDGES))
 
 
 def canonicalize_edges(edges: DataFrame, src: str = "src",
@@ -44,39 +63,57 @@ def canonicalize_edges(edges: DataFrame, src: str = "src",
     )
 
 
-def triangle_census(canon: DataFrame) -> DataFrame:
+def triangle_census(canon: DataFrame,
+                    n_edges_hint: int | None = None) -> DataFrame:
     """One row (n_nodes, n_edges, n_triangles) for a canonical edge set.
 
     ``canon`` must be (u, v) with u < v and no duplicates — the output
     of :func:`canonicalize_edges`. The caller may pass any edge table;
     the census persists its own intermediates and releases them (on
-    error paths too).
+    error paths too). Shuffle partitions for the census stages are
+    sized to the edge count via sized_shuffle_partitions, same as the
+    connected-components loop; a caller that knows the edge count a
+    priori (the R-MAT generator) passes ``n_edges_hint`` and skips the
+    blocking count job. A cached frame keeps the shuffle width in force
+    at its ``persist()`` call, so the hint also pins the width of
+    ``canon``'s cache.
     """
-    canon = canon.persist()
-    oriented = None
+    with sized_shuffle_partitions(canon.sparkSession, n_edges_hint):
+        canon = canon.persist()
     try:
-        deg = (
-            canon.select(F.col("u").alias("n"))
-            .unionAll(canon.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count("*").alias("deg"))
-        )
+        if n_edges_hint is None:
+            n_edges_hint = canon.count()  # materializes the persist
+        with sized_shuffle_partitions(canon.sparkSession, n_edges_hint):
+            return _census_body(canon)
+    except Exception:
+        canon.unpersist()
+        raise
 
-        # attach the lexicographic (degree, id) orientation key to both
-        # endpoints, then orient low -> high
-        ku = deg.select(F.col("n").alias("u"),
-                        F.struct(F.col("deg"), F.col("n")).alias("ord_u"))
-        kv = deg.select(F.col("n").alias("v"),
-                        F.struct(F.col("deg"), F.col("n")).alias("ord_v"))
-        oriented = (
-            canon.join(ku, "u").join(kv, "v")
-            .select(
-                F.when(F.col("ord_u") < F.col("ord_v"), F.col("u")).otherwise(F.col("v")).alias("a"),
-                F.when(F.col("ord_u") < F.col("ord_v"), F.col("v")).otherwise(F.col("u")).alias("b"),
-                F.greatest("ord_u", "ord_v").alias("ord_b"),
-            )
-            .persist()
+
+def _census_body(canon: DataFrame) -> DataFrame:
+    deg = (
+        canon.select(F.col("u").alias("n"))
+        .unionAll(canon.select(F.col("v").alias("n")))
+        .groupBy("n")
+        .agg(F.count("*").alias("deg"))
+    )
+
+    # attach the lexicographic (degree, id) orientation key to both
+    # endpoints, then orient low -> high
+    ku = deg.select(F.col("n").alias("u"),
+                    F.struct(F.col("deg"), F.col("n")).alias("ord_u"))
+    kv = deg.select(F.col("n").alias("v"),
+                    F.struct(F.col("deg"), F.col("n")).alias("ord_v"))
+    oriented = (
+        canon.join(ku, "u").join(kv, "v")
+        .select(
+            F.when(F.col("ord_u") < F.col("ord_v"), F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(F.col("ord_u") < F.col("ord_v"), F.col("v")).otherwise(F.col("u")).alias("b"),
+            F.greatest("ord_u", "ord_v").alias("ord_b"),
         )
+        .persist()
+    )
+    try:
         e1 = oriented.select("a", F.col("b").alias("b1"), F.col("ord_b").alias("ord_b1"))
         e2 = oriented.select("a", F.col("b").alias("b2"), F.col("ord_b").alias("ord_b2"))
         wedges = e1.join(e2, "a").filter(F.col("ord_b1") < F.col("ord_b2"))
@@ -93,8 +130,7 @@ def triangle_census(canon: DataFrame) -> DataFrame:
         )
         return materialize_release(out, canon, oriented)
     except Exception:
-        if oriented is not None:
-            oriented.unpersist()
+        oriented.unpersist()
         canon.unpersist()
         raise
 
@@ -105,7 +141,8 @@ def triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sf_dir`` is unused (the graph is generated); kept for the
     queries() signature.
     """
-    return triangle_census(canonicalize_edges(rmat_raw_edges(spark)))
+    return triangle_census(canonicalize_edges(rmat_raw_edges(spark)),
+                           n_edges_hint=_gen_edge_count())
 
 
 TRIANGLES_SQL = f"""
@@ -128,7 +165,8 @@ BFS_MAX_DEPTH = 64
 
 
 def bfs_depths(canon: DataFrame, source: int = BFS_SOURCE,
-               max_depth: int = BFS_MAX_DEPTH) -> DataFrame:
+               max_depth: int = BFS_MAX_DEPTH,
+               n_adj_hint: int | None = None) -> DataFrame:
     """(node, depth) minimum-hop distances from ``source`` over an
     undirected canonical edge set — level-synchronous frontier BFS.
 
@@ -141,11 +179,17 @@ def bfs_depths(canon: DataFrame, source: int = BFS_SOURCE,
     fine); persisted state is released on every path.
     """
     spark = canon.sparkSession
-    adj = canon.unionByName(
-        canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
+    # a known size pins the cache's width too (fixed at persist())
+    with sized_shuffle_partitions(spark, n_adj_hint):
+        adj = canon.unionByName(
+            canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ).persist()
     visited = None
     try:
+        # sizes the loop; the count also materializes the persist —
+        # skipped when the caller knows the edge count a priori (the
+        # persist then fills inside the first level's expand job)
+        n_adj = adj.count() if n_adj_hint is None else n_adj_hint
         visited = spark.range(1).select(
             F.lit(source).cast("long").alias("node"),
             F.lit(0).cast("long").alias("depth")).persist()
@@ -161,21 +205,22 @@ def bfs_depths(canon: DataFrame, source: int = BFS_SOURCE,
                 .localCheckpoint()
             )
 
-        for d in range(1, max_depth + 1):
-            nxt = expand(frontier, d)
-            if nxt.isEmpty():
-                break
-            new_visited = visited.unionByName(nxt).localCheckpoint()
-            visited.unpersist()
-            visited = new_visited.persist()
-            frontier = nxt
-        else:
-            # the last level still discovered nodes; the traversal
-            # is complete iff one more expansion finds nothing new
-            if not expand(frontier, max_depth + 1).isEmpty():
-                raise RuntimeError(
-                    f"bfs_depths: frontier alive after {max_depth} levels")
-        out = visited.orderBy("node").localCheckpoint()
+        with sized_shuffle_partitions(spark, n_adj):
+            for d in range(1, max_depth + 1):
+                nxt = expand(frontier, d)
+                if nxt.isEmpty():
+                    break
+                new_visited = visited.unionByName(nxt).localCheckpoint()
+                visited.unpersist()
+                visited = new_visited.persist()
+                frontier = nxt
+            else:
+                # the last level still discovered nodes; the traversal
+                # is complete iff one more expansion finds nothing new
+                if not expand(frontier, max_depth + 1).isEmpty():
+                    raise RuntimeError(
+                        f"bfs_depths: frontier alive after {max_depth} levels")
+            out = visited.orderBy("node").localCheckpoint()
     finally:
         if visited is not None:
             visited.unpersist()
@@ -186,7 +231,8 @@ def bfs_depths(canon: DataFrame, source: int = BFS_SOURCE,
 def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-hop depths from node 0 over the R-MAT graph (``sf_dir``
     unused — generated input)."""
-    return bfs_depths(canonicalize_edges(rmat_raw_edges(spark)))
+    return bfs_depths(canonicalize_edges(rmat_raw_edges(spark)),
+                      n_adj_hint=2 * _gen_edge_count())
 
 
 BFS_SQL = f"""
@@ -224,7 +270,8 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kmr_spark.operators.graph import connected_components
 
     edges = rmat_raw_edges(spark).select("src", "dst").distinct()
-    labels = connected_components(edges, "src", "dst")
+    labels = connected_components(edges, "src", "dst",
+                                  n_pairs_hint=_gen_edge_count())
     w = Window.partitionBy("label")
     return (
         labels.withColumn("component_size", F.count("*").over(w))
@@ -274,36 +321,37 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-keyed joins edge->degree, one global 1-row moment fold with
     map-side combine.
     """
-    canon = canonicalize_edges(rmat_raw_edges(spark)).persist()
-    try:
-        deg = (canon.select(F.col("u").alias("node"))
-               .unionAll(canon.select(F.col("v").alias("node")))
-               .groupBy("node").agg(F.count("*").alias("d")))
-        eb = (canon.select(F.col("u").alias("a"), F.col("v").alias("b"))
-              .unionAll(canon.select(F.col("v").alias("a"),
-                                     F.col("u").alias("b"))))
-        da = deg.select(F.col("node").alias("a"), F.col("d").alias("dx"))
-        db = deg.select(F.col("node").alias("b"), F.col("d").alias("dy"))
-        dec = lambda c: F.col(c).cast("decimal(38,0)")
-        m = (eb.join(da, "a").join(db, "b")
-             .agg(F.count("*").alias("n"),
-                  F.sum(dec("dx")).alias("sx"),
-                  F.sum(dec("dx") * dec("dy")).alias("sxy"),
-                  F.sum(dec("dx") * dec("dx")).alias("sxx")))
-        n_d = F.col("n").cast("double")
-        sx_d = F.col("sx").cast("double")
-        sxy_d = F.col("sxy").cast("double")
-        sxx_d = F.col("sxx").cast("double")
-        out = m.select(
-            "n", F.col("sx").cast("long").alias("sum_deg"),
-            F.col("sxy").cast("long").alias("sum_xy"),
-            F.col("sxx").cast("long").alias("sum_xx"),
-            ((n_d * sxy_d - sx_d * sx_d) / (n_d * sxx_d - sx_d * sx_d))
-            .alias("assortativity"))
-        return materialize_release(out, canon)
-    except Exception:
-        canon.unpersist()
-        raise
+    with sized_shuffle_partitions(spark, _gen_edge_count()):
+        canon = canonicalize_edges(rmat_raw_edges(spark)).persist()
+        try:
+            deg = (canon.select(F.col("u").alias("node"))
+                   .unionAll(canon.select(F.col("v").alias("node")))
+                   .groupBy("node").agg(F.count("*").alias("d")))
+            eb = (canon.select(F.col("u").alias("a"), F.col("v").alias("b"))
+                  .unionAll(canon.select(F.col("v").alias("a"),
+                                         F.col("u").alias("b"))))
+            da = deg.select(F.col("node").alias("a"), F.col("d").alias("dx"))
+            db = deg.select(F.col("node").alias("b"), F.col("d").alias("dy"))
+            dec = lambda c: F.col(c).cast("decimal(38,0)")
+            m = (eb.join(da, "a").join(db, "b")
+                 .agg(F.count("*").alias("n"),
+                      F.sum(dec("dx")).alias("sx"),
+                      F.sum(dec("dx") * dec("dy")).alias("sxy"),
+                      F.sum(dec("dx") * dec("dx")).alias("sxx")))
+            n_d = F.col("n").cast("double")
+            sx_d = F.col("sx").cast("double")
+            sxy_d = F.col("sxy").cast("double")
+            sxx_d = F.col("sxx").cast("double")
+            out = m.select(
+                "n", F.col("sx").cast("long").alias("sum_deg"),
+                F.col("sxy").cast("long").alias("sum_xy"),
+                F.col("sxx").cast("long").alias("sum_xx"),
+                ((n_d * sxy_d - sx_d * sx_d) / (n_d * sxx_d - sx_d * sx_d))
+                .alias("assortativity"))
+            return materialize_release(out, canon)
+        except Exception:
+            canon.unpersist()
+            raise
 
 
 ASSORTATIVITY_SQL = f"""
@@ -356,41 +404,40 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge set removes existing links; degrees broadcast back; top-k is
     TakeOrderedAndProject, no global sort.
     """
-    canon = canonicalize_edges(rmat_raw_edges(spark)).persist()
-    try:
-        both = (canon.select(F.col("u").alias("c"), F.col("v").alias("x"))
-                .unionAll(canon.select(F.col("v").alias("c"),
-                                       F.col("u").alias("x"))))
-        deg = both.groupBy(F.col("c").alias("node")).agg(
-            F.count("*").alias("d"))
-        w1 = both.select("c", F.col("x").alias("a"))
-        w2 = both.select("c", F.col("x").alias("b"))
-        wedges = (w1.join(w2, "c")
-                  .filter(F.col("a") < F.col("b"))
-                  .groupBy("a", "b")
-                  .agg(F.count("*").alias("common"))
-                  .filter(F.col("common") >= LP_MIN_COMMON))
-        non_edges = wedges.join(
-            canon, (wedges["a"] == canon["u"]) & (wedges["b"] == canon["v"]),
-            "left_anti")
-        da = deg.select(F.col("node").alias("a"), F.col("d").alias("da"))
-        db = deg.select(F.col("node").alias("b"), F.col("d").alias("db"))
-        scored = (
-            non_edges.join(F.broadcast(da), "a")
-            .join(F.broadcast(db), "b")
-            .select(
-                "a", "b", "common", "da", "db",
-                F.expr("(1000 * common) DIV (da + db - common)")
-                .alias("jaccard_permille")))
-        out = scored.orderBy(
-            F.col("common").desc(), F.col("jaccard_permille").desc(),
-            "a", "b").limit(LP_TOP_K)
-        from kmr_spark.session import materialize_release
-
-        return materialize_release(out, canon)
-    except Exception:
-        canon.unpersist()
-        raise
+    with sized_shuffle_partitions(spark, _gen_edge_count()):
+        canon = canonicalize_edges(rmat_raw_edges(spark)).persist()
+        try:
+            both = (canon.select(F.col("u").alias("c"), F.col("v").alias("x"))
+                    .unionAll(canon.select(F.col("v").alias("c"),
+                                           F.col("u").alias("x"))))
+            deg = both.groupBy(F.col("c").alias("node")).agg(
+                F.count("*").alias("d"))
+            w1 = both.select("c", F.col("x").alias("a"))
+            w2 = both.select("c", F.col("x").alias("b"))
+            wedges = (w1.join(w2, "c")
+                      .filter(F.col("a") < F.col("b"))
+                      .groupBy("a", "b")
+                      .agg(F.count("*").alias("common"))
+                      .filter(F.col("common") >= LP_MIN_COMMON))
+            non_edges = wedges.join(
+                canon, (wedges["a"] == canon["u"]) & (wedges["b"] == canon["v"]),
+                "left_anti")
+            da = deg.select(F.col("node").alias("a"), F.col("d").alias("da"))
+            db = deg.select(F.col("node").alias("b"), F.col("d").alias("db"))
+            scored = (
+                non_edges.join(F.broadcast(da), "a")
+                .join(F.broadcast(db), "b")
+                .select(
+                    "a", "b", "common", "da", "db",
+                    F.expr("(1000 * common) DIV (da + db - common)")
+                    .alias("jaccard_permille")))
+            out = scored.orderBy(
+                F.col("common").desc(), F.col("jaccard_permille").desc(),
+                "a", "b").limit(LP_TOP_K)
+            return materialize_release(out, canon)
+        except Exception:
+            canon.unpersist()
+            raise
 
 
 LINK_PREDICTION_SQL = f"""
@@ -769,94 +816,95 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     positives), integer-summed, and the final doubles are single
     fixed expression trees over BIGINTs.
     """
-    canon = canonicalize_edges(rmat_raw_edges(spark)).persist()
     oriented = None
     deg = None
-    try:
-        # persisted: referenced FOUR times below (ku, kv, the
-        # degree>=2 filter and the wedge-count fold) — unpersisted
-        # it was recomputed per reference (measured: most of the
-        # 6.5s -> 2.9s win on this query, with the count removal)
-        deg = (
-            canon.select(F.col("u").alias("node"))
-            .unionAll(canon.select(F.col("v").alias("node")))
-            .groupBy("node").agg(F.count("*").alias("degree"))
-            .persist())
-        # degree-oriented edges, low (degree, id) -> high, exactly
-        # as triangle_census orients them
-        ku = deg.select(
-            F.col("node").alias("u"),
-            F.struct(F.col("degree"), F.col("node")).alias("ord_u"))
-        kv = deg.select(
-            F.col("node").alias("v"),
-            F.struct(F.col("degree"), F.col("node")).alias("ord_v"))
-        oriented = (
-            canon.join(ku, "u").join(kv, "v")
-            .select(
-                F.when(F.col("ord_u") < F.col("ord_v"), F.col("u"))
-                .otherwise(F.col("v")).alias("a"),
-                F.when(F.col("ord_u") < F.col("ord_v"), F.col("v"))
-                .otherwise(F.col("u")).alias("b"),
-                F.greatest("ord_u", "ord_v").alias("ord_b"))
-            .persist())
-        e1 = oriented.select(
-            "a", F.col("b").alias("b1"), F.col("ord_b").alias("ord_b1"))
-        e2 = oriented.select(
-            "a", F.col("b").alias("b2"), F.col("ord_b").alias("ord_b2"))
-        wedges = (e1.join(e2, "a")
-                  .filter(F.col("ord_b1") < F.col("ord_b2")))
-        closer = oriented.select(
-            F.col("a").alias("b1"), F.col("b").alias("b2"))
-        # each triangle closes exactly once; credit all 3 corners
-        closed = wedges.join(closer, ["b1", "b2"])
-        tri_per_node = (
-            closed.select(F.explode(F.array("a", "b1", "b2"))
-                          .alias("node"))
-            .groupBy("node").agg(F.count("*").alias("tri")))
-        local = (
-            deg.filter(F.col("degree") >= 2)
-            .join(tri_per_node, "node", "left")
-            .select(
-                "node", "degree",
-                F.coalesce(F.col("tri"), F.lit(0)).alias("tri"))
-        )
-        # ONE pass over the joined frame yields the local-cc fold
-        # AND the global triangle count (sum tri == 3T: each
-        # triangle is a closed wedge at each of its 3 corners) —
-        # the wedge join is planned exactly once.
-        sums = local.select(
-            F.expr("(2000000 * tri) DIV (degree * (degree - 1))")
-            .alias("cc_ppm"), "tri"
-        ).agg(
-            F.count("*").alias("n_nodes_deg2"),
-            F.sum("cc_ppm").alias("sum_cc_ppm"),
-            (F.sum("tri") / 3).cast("long").alias("n_triangles"))
-        wedge_tri = deg.agg(F.sum(F.expr(
-            "(degree * (degree - 1)) DIV 2")).alias("n_wedges"))
-        dd = lambda c: F.col(c).cast("double")
-        out = (
-            sums.crossJoin(F.broadcast(wedge_tri))
-            .select(
-                "n_nodes_deg2", "n_wedges", "n_triangles",
-                (F.lit(3.0) * dd("n_triangles") / dd("n_wedges"))
-                .alias("transitivity"),
-                (dd("sum_cc_ppm") / (F.lit(1000000.0)
-                                     * dd("n_nodes_deg2")))
-                .alias("avg_local_cc"))
-        )
-        # materialize BEFORE releasing the caches: the r10 form
-        # unpersisted in a finally around a lazily-returned plan,
-        # so the caller's action recomputed the whole wedge
-        # pipeline with every cache already gone (deg evaluated
-        # 4x, oriented 3x, canon under each) — the single biggest
-        # cost in this query's 7s bench sample
-        return materialize_release(out, oriented, deg, canon)
-    except Exception:
-        for df in (oriented, deg):
-            if df is not None:
-                df.unpersist()
-        canon.unpersist()
-        raise
+    with sized_shuffle_partitions(spark, _gen_edge_count()):
+        canon = canonicalize_edges(rmat_raw_edges(spark)).persist()
+        try:
+            # persisted: referenced FOUR times below (ku, kv, the
+            # degree>=2 filter and the wedge-count fold) — unpersisted
+            # it was recomputed per reference (measured: most of the
+            # 6.5s -> 2.9s win on this query, with the count removal)
+            deg = (
+                canon.select(F.col("u").alias("node"))
+                .unionAll(canon.select(F.col("v").alias("node")))
+                .groupBy("node").agg(F.count("*").alias("degree"))
+                .persist())
+            # degree-oriented edges, low (degree, id) -> high, exactly
+            # as triangle_census orients them
+            ku = deg.select(
+                F.col("node").alias("u"),
+                F.struct(F.col("degree"), F.col("node")).alias("ord_u"))
+            kv = deg.select(
+                F.col("node").alias("v"),
+                F.struct(F.col("degree"), F.col("node")).alias("ord_v"))
+            oriented = (
+                canon.join(ku, "u").join(kv, "v")
+                .select(
+                    F.when(F.col("ord_u") < F.col("ord_v"), F.col("u"))
+                    .otherwise(F.col("v")).alias("a"),
+                    F.when(F.col("ord_u") < F.col("ord_v"), F.col("v"))
+                    .otherwise(F.col("u")).alias("b"),
+                    F.greatest("ord_u", "ord_v").alias("ord_b"))
+                .persist())
+            e1 = oriented.select(
+                "a", F.col("b").alias("b1"), F.col("ord_b").alias("ord_b1"))
+            e2 = oriented.select(
+                "a", F.col("b").alias("b2"), F.col("ord_b").alias("ord_b2"))
+            wedges = (e1.join(e2, "a")
+                      .filter(F.col("ord_b1") < F.col("ord_b2")))
+            closer = oriented.select(
+                F.col("a").alias("b1"), F.col("b").alias("b2"))
+            # each triangle closes exactly once; credit all 3 corners
+            closed = wedges.join(closer, ["b1", "b2"])
+            tri_per_node = (
+                closed.select(F.explode(F.array("a", "b1", "b2"))
+                              .alias("node"))
+                .groupBy("node").agg(F.count("*").alias("tri")))
+            local = (
+                deg.filter(F.col("degree") >= 2)
+                .join(tri_per_node, "node", "left")
+                .select(
+                    "node", "degree",
+                    F.coalesce(F.col("tri"), F.lit(0)).alias("tri"))
+            )
+            # ONE pass over the joined frame yields the local-cc fold
+            # AND the global triangle count (sum tri == 3T: each
+            # triangle is a closed wedge at each of its 3 corners) —
+            # the wedge join is planned exactly once.
+            sums = local.select(
+                F.expr("(2000000 * tri) DIV (degree * (degree - 1))")
+                .alias("cc_ppm"), "tri"
+            ).agg(
+                F.count("*").alias("n_nodes_deg2"),
+                F.sum("cc_ppm").alias("sum_cc_ppm"),
+                (F.sum("tri") / 3).cast("long").alias("n_triangles"))
+            wedge_tri = deg.agg(F.sum(F.expr(
+                "(degree * (degree - 1)) DIV 2")).alias("n_wedges"))
+            dd = lambda c: F.col(c).cast("double")
+            out = (
+                sums.crossJoin(F.broadcast(wedge_tri))
+                .select(
+                    "n_nodes_deg2", "n_wedges", "n_triangles",
+                    (F.lit(3.0) * dd("n_triangles") / dd("n_wedges"))
+                    .alias("transitivity"),
+                    (dd("sum_cc_ppm") / (F.lit(1000000.0)
+                                         * dd("n_nodes_deg2")))
+                    .alias("avg_local_cc"))
+            )
+            # materialize BEFORE releasing the caches: the r10 form
+            # unpersisted in a finally around a lazily-returned plan,
+            # so the caller's action recomputed the whole wedge
+            # pipeline with every cache already gone (deg evaluated
+            # 4x, oriented 3x, canon under each) — the single biggest
+            # cost in this query's 7s bench sample
+            return materialize_release(out, oriented, deg, canon)
+        except Exception:
+            for df in (oriented, deg):
+                if df is not None:
+                    df.unpersist()
+            canon.unpersist()
+            raise
 
 
 CLUSTERING_SQL = f"""
@@ -911,29 +959,31 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distinct, not per-occurrence).
     """
     raw = rmat_raw_edges(spark)
-    directed = (
-        raw.filter(F.col("src") != F.col("dst")).distinct().persist())
-    try:
-        n_directed = directed.count()
-        rev = directed.select(F.col("dst").alias("src"),
-                              F.col("src").alias("dst"))
-        mutual = directed.join(rev, ["src", "dst"], "left_semi") \
-            .agg(F.count("*").alias("n_mutual"))
-        loops = raw.filter(F.col("src") == F.col("dst")).distinct() \
-            .agg(F.count("*").alias("n_self_loops"))
-        dd = lambda c: F.col(c).cast("double")
-        return (
-            mutual.crossJoin(F.broadcast(loops))
-            .select(
-                F.lit(n_directed).cast("long").alias("n_directed"),
-                "n_mutual", "n_self_loops",
-                F.expr(f"(1000 * n_mutual) DIV {n_directed}")
-                .alias("reciprocity_permille"),
-                (dd("n_mutual") / F.lit(float(n_directed)))
-                .alias("reciprocity"))
-        )
-    finally:
-        directed.unpersist()
+    with sized_shuffle_partitions(spark, _gen_edge_count()):
+        directed = (
+            raw.filter(F.col("src") != F.col("dst")).distinct().persist())
+        try:
+            n_directed = directed.count()
+            rev = directed.select(F.col("dst").alias("src"),
+                                  F.col("src").alias("dst"))
+            mutual = directed.join(rev, ["src", "dst"], "left_semi") \
+                .agg(F.count("*").alias("n_mutual"))
+            loops = raw.filter(F.col("src") == F.col("dst")).distinct() \
+                .agg(F.count("*").alias("n_self_loops"))
+            dd = lambda c: F.col(c).cast("double")
+            return (
+                mutual.crossJoin(F.broadcast(loops))
+                .select(
+                    F.lit(n_directed).cast("long").alias("n_directed"),
+                    "n_mutual", "n_self_loops",
+                    F.expr(f"(1000 * n_mutual) DIV {n_directed}")
+                    .alias("reciprocity_permille"),
+                    (dd("n_mutual") / F.lit(float(n_directed)))
+                    .alias("reciprocity"))
+                .localCheckpoint()
+            )
+        finally:
+            directed.unpersist()
 
 
 RECIPROCITY_SQL = f"""
@@ -983,42 +1033,43 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final left join — parity with the oracle's COALESCE.
     """
     raw = rmat_raw_edges(spark)
-    edges = raw.filter(F.col("src") != F.col("dst")).distinct().persist()
-    try:
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .unionByName(edges.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        a = nodes.select("node", F.lit(1).cast("long").alias("s"))
-        for _ in range(HITS_ROUNDS):
-            h = (
-                edges.join(a.withColumnRenamed("node", "dst"), "dst")
-                .groupBy("src").agg(F.sum("s").alias("hs"))
+    with sized_shuffle_partitions(spark, _gen_edge_count()):
+        edges = raw.filter(F.col("src") != F.col("dst")).distinct().persist()
+        try:
+            nodes = (
+                edges.select(F.col("src").alias("node"))
+                .unionByName(edges.select(F.col("dst").alias("node")))
+                .distinct()
             )
-            a = (
-                edges.join(h, "src")
-                .groupBy("dst").agg(F.sum("hs").alias("s"))
-                .withColumnRenamed("dst", "node")
+            a = nodes.select("node", F.lit(1).cast("long").alias("s"))
+            for _ in range(HITS_ROUNDS):
+                h = (
+                    edges.join(a.withColumnRenamed("node", "dst"), "dst")
+                    .groupBy("src").agg(F.sum("s").alias("hs"))
+                )
+                a = (
+                    edges.join(h, "src")
+                    .groupBy("dst").agg(F.sum("hs").alias("s"))
+                    .withColumnRenamed("dst", "node")
+                )
+                # rebind h to the node-keyed frame for the output union
+                h = h.withColumnRenamed("src", "node") \
+                     .withColumnRenamed("hs", "s")
+            top_auth = (
+                nodes.join(a, "node", "left")
+                .select("node", F.coalesce("s", F.lit(0)).alias("score"),
+                        F.lit("authority").alias("role"))
+                .orderBy(F.col("score").desc(), "node").limit(HITS_TOP)
             )
-            # rebind h to the node-keyed frame for the output union
-            h = h.withColumnRenamed("src", "node") \
-                 .withColumnRenamed("hs", "s")
-        top_auth = (
-            nodes.join(a, "node", "left")
-            .select("node", F.coalesce("s", F.lit(0)).alias("score"),
-                    F.lit("authority").alias("role"))
-            .orderBy(F.col("score").desc(), "node").limit(HITS_TOP)
-        )
-        top_hub = (
-            nodes.join(h, "node", "left")
-            .select("node", F.coalesce("s", F.lit(0)).alias("score"),
-                    F.lit("hub").alias("role"))
-            .orderBy(F.col("score").desc(), "node").limit(HITS_TOP)
-        )
-        return top_auth.unionByName(top_hub).localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()
+            top_hub = (
+                nodes.join(h, "node", "left")
+                .select("node", F.coalesce("s", F.lit(0)).alias("score"),
+                        F.lit("hub").alias("role"))
+                .orderBy(F.col("score").desc(), "node").limit(HITS_TOP)
+            )
+            return top_auth.unionByName(top_hub).localCheckpoint(eager=True)
+        finally:
+            edges.unpersist()
 
 
 def _hits_sql() -> str:
@@ -1079,58 +1130,58 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncating lineage between rounds (the kcore/CC loop discipline).
     The DuckDB oracle unrolls the same rounds as MATERIALIZED CTEs.
     """
-    edges = canonicalize_edges(rmat_raw_edges(spark)).persist()
-    caches = [edges]
-    try:
-        rows = []
-        cur = edges
-        for rnd in range(1, TRUSS_ROUNDS + 1):
-            e1 = cur.select(F.col("u").alias("a"), F.col("v").alias("b"))
-            e2 = cur.select(F.col("u").alias("a"), F.col("v").alias("c"))
-            e3 = cur.select(F.col("u").alias("b"), F.col("v").alias("c"))
-            tris = (
-                e1.join(e2, "a").filter(F.col("b") < F.col("c"))
-                .join(e3, ["b", "c"])
-            )
-            support = (
-                tris.select(
-                    F.explode(F.array(
-                        F.struct(F.col("a").alias("u"),
-                                 F.col("b").alias("v")),
-                        F.struct(F.col("a").alias("u"),
-                                 F.col("c").alias("v")),
-                        F.struct(F.col("b").alias("u"),
-                                 F.col("c").alias("v")))).alias("e"))
-                .select("e.u", "e.v")
-                .groupBy("u", "v").agg(F.count("*").alias("sup"))
-            )
-            nxt = (
-                cur.join(support.filter(F.col("sup") >= TRUSS_K - 2),
-                         ["u", "v"], "left_semi")
-                # lazy: fixed rounds, no mid-loop action — the
-                # final stats union materializes the whole peel
-                # chain in one job; the checkpoint still caches,
-                # so round r+1 and round r's stat share one
-                # evaluation of nxt
-                .localCheckpoint(eager=False)
-            )
-            stat = (
-                nxt.agg(
-                    F.count("*").alias("n_edges"),
-                    F.coalesce(F.sum(F.col("u") * 1048576 + F.col("v")),
-                               F.lit(0)).alias("edge_checksum"))
-                .select(F.lit(rnd).cast("long").alias("round"),
-                        "n_edges", "edge_checksum")
-            )
-            rows.append(stat)
-            cur = nxt
-        out = rows[0]
-        for r in rows[1:]:
-            out = out.unionByName(r)
-        return out.orderBy("round")
-    finally:
-        for c in caches:
-            c.unpersist()
+    with sized_shuffle_partitions(spark, _gen_edge_count()):
+        edges = canonicalize_edges(rmat_raw_edges(spark)).persist()
+        try:
+            rows = []
+            cur = edges
+            for rnd in range(1, TRUSS_ROUNDS + 1):
+                e1 = cur.select(F.col("u").alias("a"), F.col("v").alias("b"))
+                e2 = cur.select(F.col("u").alias("a"), F.col("v").alias("c"))
+                e3 = cur.select(F.col("u").alias("b"), F.col("v").alias("c"))
+                tris = (
+                    e1.join(e2, "a").filter(F.col("b") < F.col("c"))
+                    .join(e3, ["b", "c"])
+                )
+                support = (
+                    tris.select(
+                        F.explode(F.array(
+                            F.struct(F.col("a").alias("u"),
+                                     F.col("b").alias("v")),
+                            F.struct(F.col("a").alias("u"),
+                                     F.col("c").alias("v")),
+                            F.struct(F.col("b").alias("u"),
+                                     F.col("c").alias("v")))).alias("e"))
+                    .select("e.u", "e.v")
+                    .groupBy("u", "v").agg(F.count("*").alias("sup"))
+                )
+                nxt = (
+                    cur.join(support.filter(F.col("sup") >= TRUSS_K - 2),
+                             ["u", "v"], "left_semi")
+                    # lazy: fixed rounds, no mid-loop action — the
+                    # final stats union materializes the whole peel
+                    # chain in one job; the checkpoint still caches,
+                    # so round r+1 and round r's stat share one
+                    # evaluation of nxt
+                    .localCheckpoint(eager=False)
+                )
+                stat = (
+                    nxt.agg(
+                        F.count("*").alias("n_edges"),
+                        F.coalesce(F.sum(F.col("u") * 1048576 + F.col("v")),
+                                   F.lit(0)).alias("edge_checksum"))
+                    .select(F.lit(rnd).cast("long").alias("round"),
+                            "n_edges", "edge_checksum")
+                )
+                rows.append(stat)
+                cur = nxt
+            out = rows[0]
+            for r in rows[1:]:
+                out = out.unionByName(r)
+            # run the peel while the edge cache and the width are in force
+            return out.orderBy("round").localCheckpoint()
+        finally:
+            edges.unpersist()
 
 
 def _ktruss_sql() -> str:

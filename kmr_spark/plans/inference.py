@@ -598,20 +598,24 @@ def events_qte_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent-sum/count BIGINTs.
     """
     from kmr_spark.operators.sort import ntile_from_rank, ranking_per_group
+    from kmr_spark.session import parquet_num_rows, sized_shuffle_partitions
 
     ev = load_tables(spark, sf_dir)["events"].filter(
         F.col("event_type") == "purchase")
-    base = ev.select(
-        F.when(F.pmod("user_id", F.lit(2)) == 1, "treat")
-        .otherwise("control").alias("grp"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
-        "event_id").persist()
-    try:
-        ranked = ranking_per_group(
-            base, ["grp"], [F.col("cents"), F.col("event_id")],
-            materialize=True)
-    finally:
-        base.unpersist()
+    # pinned before the persist, which fixes the cache's width, and
+    # sized from an upper bound on the purchases: |events|
+    with sized_shuffle_partitions(spark, parquet_num_rows(sf_dir, "events")):
+        base = ev.select(
+            F.when(F.pmod("user_id", F.lit(2)) == 1, "treat")
+            .otherwise("control").alias("grp"),
+            F.floor(F.col("value") * 100).cast("long").alias("cents"),
+            "event_id").persist()
+        try:
+            ranked = ranking_per_group(
+                base, ["grp"], [F.col("cents"), F.col("event_id")],
+                materialize=True)
+        finally:
+            base.unpersist()
     by_dec = (
         ranked.select(
             "grp", "cents",

@@ -108,36 +108,41 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from kmr_spark.operators.sort import ranking
-    from kmr_spark.session import materialize_release
+    from kmr_spark.session import (materialize_release, parquet_num_rows,
+                                   sized_shuffle_partitions)
 
     orders = load_tables(spark, sf_dir)["orders"]
-    rev = orders.groupBy(F.col("o_custkey").alias("k")).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100)).alias("r")).persist()
-    try:
-        n = rev.count()
-        reg: list[DataFrame] = []
-        ranked = ranking(rev, [F.col("r").desc(), F.col("k")],
-                         cache_registry=reg)
-        by_dec = (
-            ranked.select(F.expr(f"(rank * 10) DIV {n}").alias("decile"),
-                          "r")
-            .groupBy("decile")
-            .agg(F.count("*").alias("n_customers"),
-                 F.sum("r").alias("decile_rev_cents"))
-        )
-        wcum = (Window.orderBy("decile")
-                .rowsBetween(Window.unboundedPreceding, 0))
-        wall = (Window.orderBy("decile")
-                .rowsBetween(Window.unboundedPreceding,
-                             Window.unboundedFollowing))
-        out = by_dec.select(
-            "decile", "n_customers", "decile_rev_cents",
-            (F.sum("decile_rev_cents").over(wcum).cast("double")
-             / F.sum("decile_rev_cents").over(wall)).alias("cum_share")
-        ).orderBy("decile")
-        return materialize_release(out, *reg)
-    finally:
-        rev.unpersist()
+    # pinned before the persist, which fixes the cache's width, and
+    # sized from an upper bound on rev: one row per customer
+    with sized_shuffle_partitions(
+            spark, parquet_num_rows(sf_dir, "customer")):
+        rev = orders.groupBy(F.col("o_custkey").alias("k")).agg(
+            F.sum(F.floor(F.col("o_totalprice") * 100)).alias("r")).persist()
+        try:
+            n = rev.count()
+            reg: list[DataFrame] = []
+            ranked = ranking(rev, [F.col("r").desc(), F.col("k")],
+                             cache_registry=reg)
+            by_dec = (
+                ranked.select(F.expr(f"(rank * 10) DIV {n}").alias("decile"),
+                              "r")
+                .groupBy("decile")
+                .agg(F.count("*").alias("n_customers"),
+                     F.sum("r").alias("decile_rev_cents"))
+            )
+            wcum = (Window.orderBy("decile")
+                    .rowsBetween(Window.unboundedPreceding, 0))
+            wall = (Window.orderBy("decile")
+                    .rowsBetween(Window.unboundedPreceding,
+                                 Window.unboundedFollowing))
+            out = by_dec.select(
+                "decile", "n_customers", "decile_rev_cents",
+                (F.sum("decile_rev_cents").over(wcum).cast("double")
+                 / F.sum("decile_rev_cents").over(wall)).alias("cum_share")
+            ).orderBy("decile")
+            return materialize_release(out, *reg)
+        finally:
+            rev.unpersist()
 
 
 PARETO_SQL = """
@@ -173,21 +178,25 @@ def users_spearman_freq_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     (range sort + exscan offsets — no global windows) joined on user,
     integer Σd², closed-form rho."""
     from kmr_spark.operators.sort import ranking
+    from kmr_spark.session import parquet_num_rows, sized_shuffle_partitions
 
     ev = load_tables(spark, sf_dir)["events"].select(
         "user_id", F.floor(F.col("value") * 100).alias("c"))
-    per_user = ev.groupBy("user_id").agg(
-        F.count("*").alias("f"), F.sum("c").alias("m")).persist()
-    try:
-        n = per_user.count()
-        rf = ranking(per_user, [F.col("f"), F.col("user_id")],
-                     materialize=True).select(
-            "user_id", F.col("rank").alias("rank_f"))
-        rm = ranking(per_user, [F.col("m"), F.col("user_id")],
-                     materialize=True).select(
-            "user_id", F.col("rank").alias("rank_m"))
-    finally:
-        per_user.unpersist()
+    # pinned before the persist, which fixes the cache's width, and
+    # sized from an upper bound on the users: |events|
+    with sized_shuffle_partitions(spark, parquet_num_rows(sf_dir, "events")):
+        per_user = ev.groupBy("user_id").agg(
+            F.count("*").alias("f"), F.sum("c").alias("m")).persist()
+        try:
+            n = per_user.count()
+            rf = ranking(per_user, [F.col("f"), F.col("user_id")],
+                         materialize=True).select(
+                "user_id", F.col("rank").alias("rank_f"))
+            rm = ranking(per_user, [F.col("m"), F.col("user_id")],
+                         materialize=True).select(
+                "user_id", F.col("rank").alias("rank_m"))
+        finally:
+            per_user.unpersist()
     d = F.col("rank_f") - F.col("rank_m")
     nn = F.lit(float(n))
     return (
@@ -238,24 +247,29 @@ def orders_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping the driver hash stable.
     """
     from kmr_spark.operators.sort import ranking
-    from kmr_spark.session import materialize_release
+    from kmr_spark.session import (materialize_release, parquet_num_rows,
+                                   sized_shuffle_partitions)
 
     orders = load_tables(spark, sf_dir)["orders"]
-    rev = orders.groupBy(F.col("o_custkey").alias("k")).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100)).alias("r")).persist()
-    try:
-        reg: list[DataFrame] = []
-        scanned = ranking(rev, [F.col("r").asc(), F.col("k")],
-                          cache_registry=reg)
-        sums = materialize_release(
-            scanned.agg(
-                F.count("*").alias("n_customers"),
-                F.sum("r").alias("s0"),
-                F.sum((F.col("rank") + 1).cast("decimal(38,0)")
-                      * F.col("r")).alias("s1")),
-            *reg)
-    finally:
-        rev.unpersist()
+    # pinned before the persist, which fixes the cache's width, and
+    # sized from an upper bound on rev: one row per customer
+    with sized_shuffle_partitions(
+            spark, parquet_num_rows(sf_dir, "customer")):
+        rev = orders.groupBy(F.col("o_custkey").alias("k")).agg(
+            F.sum(F.floor(F.col("o_totalprice") * 100)).alias("r")).persist()
+        try:
+            reg: list[DataFrame] = []
+            scanned = ranking(rev, [F.col("r").asc(), F.col("k")],
+                              cache_registry=reg)
+            sums = materialize_release(
+                scanned.agg(
+                    F.count("*").alias("n_customers"),
+                    F.sum("r").alias("s0"),
+                    F.sum((F.col("rank") + 1).cast("decimal(38,0)")
+                          * F.col("r")).alias("s1")),
+                *reg)
+        finally:
+            rev.unpersist()
     d = lambda c: F.col(c).cast("double")
     return sums.select(
         "n_customers",

@@ -15,8 +15,9 @@ a SparkSession configured for the engine's workload shape:
   ``kmr_shuffle_leveling_pair_count``, reference src/kmrmoreops.c:1074).
 - Arrow on (every Python-side UDF path is Arrow-batched, never per-row).
 - Shuffle partition count equal to the task slots (:func:`task_slots`),
-  not hard-coded; AQE coalesces each small shuffle's read side, so no
-  batch plan pins its own width.
+  not hard-coded; AQE coalesces each small shuffle's read side, and the
+  blocks that persist small frames pin a row-count-sized width
+  (:func:`sized_shuffle_partitions`).
 """
 
 from __future__ import annotations
@@ -83,24 +84,47 @@ def scratch_dir(prefix: str) -> str:
 
 
 @contextlib.contextmanager
-def sized_shuffle_partitions(spark: SparkSession, n_partitions: int | None):
-    """Pin ``spark.sql.shuffle.partitions`` to ``n_partitions`` for a
-    block, restoring the session value afterwards; ``None`` leaves the
-    session value alone.
+def sized_shuffle_partitions(spark: SparkSession, n_rows: int | None = None,
+                             rows_per_partition: int = 100_000, floor: int = 8,
+                             n_partitions: int | None = None):
+    """Pin ``spark.sql.shuffle.partitions`` for a block, restoring the
+    session value afterwards. With neither ``n_rows`` nor
+    ``n_partitions``, or a non-numeric session value under ``n_rows``,
+    the block runs at the session value.
 
-    Only the streaming replay runners use it. Spark fixes a stateful
-    query's state-store count from this conf at its first micro-batch
-    and AQE does not re-plan micro-batches, so they pass a width derived
-    from their input bytes (``sized_state_partitions``). Batch plans need
-    no pin: AQE coalesces the read side of a small shuffle into as few
-    partitions as its bytes need, so a sub-MB aggregate or sort reads
-    back as one partition at any session width.
+    Batch blocks pass ``n_rows``: iterative loops and rankings (connected
+    components, BFS, the triangle census, the exscan rankings) run many
+    small keyed jobs over data far smaller than the corpus. The width is
+    ``ceil(n_rows / rows_per_partition)`` raised to ``floor`` and then
+    capped at the session value, so the pin never widens the session and
+    at real scale it is a no-op. AQE already reads an uncached small
+    shuffle back as few partitions, but a frame persisted inside the
+    block keeps the width it was shuffled at: Spark leaves
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` off,
+    so AQE does not coalesce cached plans. That width is the one in
+    force at the ``persist()`` call, not at the job that fills the
+    cache. A block therefore enters the pin before it persists, and
+    runs the job that materializes its result inside it; a width that
+    must be known before the persist comes from an a-priori size or a
+    parquet-metadata upper bound (:func:`parquet_num_rows`), not from a
+    count of the frame being cached. Under a default session (200
+    shuffle partitions, local[4]) at sf0.1, removing the 16 batch pins
+    took their 19 queries from 69.4 s to 89.7 s.
+
+    The streaming replay runners pass an explicit ``n_partitions``
+    (``sized_state_partitions``, derived from input bytes and allowed to
+    exceed the session value): Spark fixes a stateful query's
+    state-store count at its first micro-batch, and AQE does not re-plan
+    micro-batches.
     """
-    if n_partitions is None:
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    n = n_partitions
+    if n is None and n_rows is not None and old.isdigit():
+        n = min(int(old), max(floor, -(-n_rows // rows_per_partition)))
+    if n is None:
         yield
         return
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
@@ -109,14 +133,11 @@ def sized_shuffle_partitions(spark: SparkSession, n_partitions: int | None):
 
 def task_slots() -> int:
     """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run
-    on (its affinity mask where the OS has one)."""
+    on (its affinity mask)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus:
         return int(cpus)
-    try:
-        return len(os.sched_getaffinity(0))
-    except AttributeError:  # no affinity API (macOS, Windows)
-        return os.cpu_count() or 1
+    return len(os.sched_getaffinity(0))
 
 
 def get_spark(app_name: str = "kmr_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -256,10 +277,13 @@ def parquet_part_files(table_dir: str) -> list[str]:
 
 def parquet_num_rows(sf_dir: str, table: str) -> int | None:
     """Row count of a driver parquet table from FILE METADATA only —
-    no Spark job, ~ms.  Stands in for a blocking count() where a
-    pipeline needs a table's cardinality up front (TF-IDF document
-    counts, the edit-distance join's salt count, the scale harness's
-    row table).  Returns None when the path is missing or unreadable.
+    no Spark job, ~ms.  Used to size :func:`sized_shuffle_partitions`
+    for pipelines that would otherwise need a blocking count/collect
+    just to pick a shuffle width (the count is advisory: the width
+    formula clamps to the session default at real scale, so an
+    estimate is as good as an exact count).  Returns None when the
+    path is missing or unreadable (callers fall back to the session
+    default width).
     """
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:

@@ -30,6 +30,7 @@ import struct
 import sys
 
 import duckdb
+from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -71,10 +72,15 @@ def main() -> None:
         oracle_timeout = float(argv[i + 1])
         del argv[i:i + 2]
 
-    from kmr_spark.session import get_spark
+    from kmr_spark.session import task_slots
     import __spark_entry__ as e
 
-    spark = get_spark("check-queries")
+    # a default session, as a caller of __spark_entry__ builds one: no
+    # engine confs (the engine sets what it needs at runtime) and the
+    # default 200 shuffle partitions; only the slot count follows the
+    # host, as in every other harness
+    spark = (SparkSession.builder.master(f"local[{task_slots()}]")
+             .appName("check-queries").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
     def fresh_connection():

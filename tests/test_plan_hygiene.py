@@ -600,12 +600,14 @@ def test_gram_matrix_is_batch_partial_kernel(spark):
 
 
 def test_aqe_coalesces_small_shuffles_to_one_partition(spark):
-    """Batch plans pin no shuffle width because AQE already reads a
-    sub-MB shuffle back as ONE partition, whatever the session width:
-    at 32 shuffle partitions a 10k-row hash aggregate and a 10k-row
-    sort each run their post-shuffle stage as a single coalesced task.
-    Disabling coalescing, or raising its floor, fails this test (the
-    same frames then spread over all 32 partitions)."""
+    """An uncached batch shuffle needs no width pin: AQE reads a sub-MB
+    shuffle back as ONE partition, whatever the session width. At 32
+    shuffle partitions a 10k-row hash aggregate and a 10k-row sort each
+    run their post-shuffle stage as a single coalesced task. Disabling
+    coalescing, or raising its floor, fails this test (the same frames
+    then spread over all 32 partitions). Persisted frames are not
+    coalesced; the blocks that build them pin their width with
+    ``sized_shuffle_partitions``."""
     from pyspark.sql import functions as F
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
@@ -624,34 +626,3 @@ def test_aqe_coalesces_small_shuffles_to_one_partition(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
-
-#: the modules whose replays run stateful streaming queries: Spark fixes
-#: the state-store count at the first micro-batch and AQE does not
-#: re-plan micro-batches, so these are the only width pins
-_STREAMING_PIN_MODULES = {"streaming/windows.py", "plans/trends.py",
-                          "plans/incremental.py", "plans/sketches.py"}
-
-
-def test_only_streaming_replays_pin_shuffle_width():
-    """No batch plan or operator enters ``sized_shuffle_partitions``,
-    and the helper takes an explicit width, never a row count."""
-    import ast
-    import inspect
-    import pathlib
-
-    import kmr_spark
-    from kmr_spark.session import sized_shuffle_partitions
-
-    root = pathlib.Path(kmr_spark.__file__).parent
-    callers = set()
-    for path in root.rglob("*.py"):
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Call):
-                f = node.func
-                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-                if name == "sized_shuffle_partitions":
-                    callers.add(path.relative_to(root).as_posix())
-    assert callers <= _STREAMING_PIN_MODULES, sorted(callers - _STREAMING_PIN_MODULES)
-    assert "streaming/windows.py" in callers
-    assert list(inspect.signature(sized_shuffle_partitions).parameters) == [
-        "spark", "n_partitions"]

@@ -10,6 +10,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from kmr_spark.session import (invalidate_table_cache, load_tables,
                                parquet_num_rows, parquet_part_files)
@@ -107,3 +108,64 @@ def test_task_slots_default_follows_cpu_affinity(monkeypatch):
         [sys.executable, "-c", code], cwd=repo, env=env, check=True,
         capture_output=True, text=True, timeout=300)
     assert out.stdout.split()[-2:] == ["local[1]", "1"], out.stdout
+
+
+def test_sized_shuffle_partitions_never_widens_the_session(spark):
+    """A row-count pin is ceil(n_rows / rows_per_partition) raised to
+    the floor and capped at the session width, so on a narrow session
+    the floor does not widen it; an explicit width is taken as given.
+    The session value comes back after the block, also on error."""
+    from kmr_spark.session import sized_shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+
+    def pinned(session_width, **kw):
+        spark.conf.set(key, str(session_width))
+        with sized_shuffle_partitions(spark, **kw):
+            return int(spark.conf.get(key))
+
+    try:
+        assert pinned(4, n_rows=10) == 4
+        assert pinned(200, n_rows=10) == 8
+        assert pinned(200, n_rows=2_500_000) == 25
+        assert pinned(200, n_rows=10**9) == 200
+        assert pinned(4, n_partitions=12) == 12
+        assert pinned(200) == 200
+        spark.conf.set(key, "200")
+        with pytest.raises(RuntimeError):
+            with sized_shuffle_partitions(spark, n_rows=10):
+                raise RuntimeError
+        assert spark.conf.get(key) == "200"
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_cache_width_is_fixed_at_persist(spark):
+    """AQE does not coalesce a cached plan, and a cache keeps the
+    shuffle width in force at its ``persist()`` call, also when the job
+    that fills it runs outside that width. This is why the batch blocks
+    enter ``sized_shuffle_partitions`` before they persist."""
+    from pyspark.sql import functions as F
+
+    from kmr_spark.session import sized_shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    # distinct plans, so the two persists do not share one cache
+    agg = lambda salt: spark.range(10_000).groupBy(
+        ((F.col("id") + salt) % 1000).alias("k")).count()
+    outside = agg(1).persist()
+    with sized_shuffle_partitions(spark, n_rows=10):
+        inside = agg(2).persist()
+    try:
+        with sized_shuffle_partitions(spark, n_rows=10):
+            outside.count()
+        inside.count()
+        assert [outside.rdd.getNumPartitions(),
+                inside.rdd.getNumPartitions()] == [32, 8]
+    finally:
+        outside.unpersist()
+        inside.unpersist()
+        spark.conf.set(key, old)
