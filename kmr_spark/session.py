@@ -84,6 +84,24 @@ def scratch_dir(prefix: str) -> str:
 
 
 @contextlib.contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set runtime confs for a block and restore each key afterwards, on
+    success or error: a key set before the block gets its old value
+    back, a key that was unset is unset again."""
+    old = {key: spark.conf.get(key, None) for key in settings}
+    try:
+        for key, value in settings.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+@contextlib.contextmanager
 def sized_shuffle_partitions(spark: SparkSession, n_rows: int | None = None,
                              rows_per_partition: int = 100_000, floor: int = 8,
                              n_partitions: int | None = None):
@@ -121,14 +139,9 @@ def sized_shuffle_partitions(spark: SparkSession, n_rows: int | None = None,
     n = n_partitions
     if n is None and n_rows is not None and old.isdigit():
         n = min(int(old), max(floor, -(-n_rows // rows_per_partition)))
-    if n is None:
+    pin = {} if n is None else {"spark.sql.shuffle.partitions": str(n)}
+    with scoped_conf(spark, pin):
         yield
-        return
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def task_slots() -> int:

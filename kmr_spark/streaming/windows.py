@@ -16,13 +16,15 @@ from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from kmr_spark.operators.pyworker import skip_unchanged_zip_rereads
-from kmr_spark.session import parquet_part_files, sized_shuffle_partitions
+from kmr_spark.session import (parquet_part_files, scoped_conf, scratch_dir,
+                               sized_shuffle_partitions)
 
 WATERMARK = "1 hour"
 
@@ -301,13 +303,14 @@ def versioned_merge_stream(events: DataFrame, state_dir: str,
             shutil.rmtree(os.path.join(state_dir, f"v{vid}"),
                           ignore_errors=True)
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with scoped_conf(spark, replay_confs(spark, checkpoint_dir)):
+        q = (
+            events.writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     versions = _versions()
     if not versions:
         raise RuntimeError("versioned_merge_stream: no batches were processed")
@@ -505,6 +508,39 @@ STATE_SPILL_BYTES = int(os.environ.get("KMR_STATE_SPILL_BYTES",
 _STATE_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
                      "RocksDBStateStoreProvider")
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming."
+                          "checkpointing.FileSystemBasedCheckpointFileManager")
+
+
+def replay_confs(spark: SparkSession, checkpoint_dir: str,
+                 spill_state: bool = False) -> dict[str, str]:
+    """Runtime confs a bounded replay runs under (:func:`scoped_conf`).
+
+    A replay whose checkpoint is on the local file system writes it
+    through Spark's FileSystem-based checkpoint manager instead of the
+    default FileContext-based one. Without the native libhadoop,
+    Hadoop's local FileContext rename forks a ``readlink`` process for
+    each of its source and destination, and Spark renames every offset,
+    commit, metadata and state-store file into place: 6–8 ms per fork on
+    a 4-core host, 2384 forks for one ``events_drop_audit_streamed``
+    call. The
+    FileSystem-based manager renames with ``File.renameTo``, an atomic
+    rename(2) on a local file system, and keeps Hadoop's ``.crc`` files
+    and Spark's checkpoint checksums. A checkpoint on any other scheme
+    (HDFS, object stores) keeps Spark's default manager, whose rename
+    is atomic there. The ``chmod`` Hadoop forks for each created file
+    or directory is left: only libhadoop avoids it.
+    """
+    scheme = urlsplit(checkpoint_dir).scheme or urlsplit(
+        spark.sparkContext._jsc.hadoopConfiguration().get(
+            "fs.defaultFS", "file:///")).scheme
+    confs = {}
+    if scheme == "file":
+        confs[_CHECKPOINT_MANAGER_KEY] = _FS_CHECKPOINT_MANAGER
+    if spill_state:
+        confs[_STATE_PROVIDER_KEY] = _ROCKSDB_PROVIDER
+    return confs
 
 
 def _scratch_until_exit(path: str) -> None:
@@ -539,8 +575,9 @@ def run_available_now_to_parquet(stream_df: DataFrame, out_dir: str,
     the watermark passed — bounded-replay tails stay in state, so gate
     aggregates through the memory sink instead.
     """
-    with sized_shuffle_partitions(stream_df.sparkSession,
-                                  n_partitions=state_partitions):
+    spark = stream_df.sparkSession
+    with sized_shuffle_partitions(spark, n_partitions=state_partitions), \
+            scoped_conf(spark, replay_confs(spark, checkpoint_dir)):
         q = (
             stream_df.writeStream.format("parquet")
             .outputMode("append")
@@ -550,7 +587,7 @@ def run_available_now_to_parquet(stream_df: DataFrame, out_dir: str,
             .start()
         )
         q.awaitTermination()
-    return stream_df.sparkSession.read.parquet(out_dir)
+    return spark.read.parquet(out_dir)
 
 
 def run_available_now(stream_df: DataFrame, query_name: str, checkpoint_dir: str,
@@ -566,9 +603,10 @@ def run_available_now(stream_df: DataFrame, query_name: str, checkpoint_dir: str
     which affects results, only where rows live (guide §5):
 
     - the query runs on the RocksDB state store (off-heap,
-      disk-backed; conf restored after the replay) — the on-heap
-      default holds ~|input| state rows as JVM objects within the
-      single AvailableNow batch and OOMed the sf10 (10M-event) replay;
+      disk-backed; :func:`replay_confs`, restored after the replay) —
+      the on-heap default holds ~|input| state rows as JVM objects
+      within the single AvailableNow batch and OOMed the sf10
+      (10M-event) replay;
     - an append-mode replay stages to a PARQUET sink on session-scoped
       scratch instead of the memory sink: the memory sink pins every
       emitted row on the driver heap for the session's lifetime (the
@@ -591,40 +629,26 @@ def run_available_now(stream_df: DataFrame, query_name: str, checkpoint_dir: str
         else:
             output_mode = "append"
     sess = stream_df.sparkSession
-    old_provider = None
-    if spill_state:
-        try:
-            old_provider = sess.conf.get(_STATE_PROVIDER_KEY)
-        except Exception:
-            old_provider = None
-        sess.conf.set(_STATE_PROVIDER_KEY, _ROCKSDB_PROVIDER)
     to_parquet = spill_state and output_mode == "append"
-    try:
-        with sized_shuffle_partitions(sess, n_partitions=state_partitions):
-            if to_parquet:
-                from kmr_spark.session import scratch_dir
-                out_dir = scratch_dir("kmr_stream_out_")
-                _scratch_until_exit(out_dir)
-                writer = (
-                    stream_df.writeStream.format("parquet")
-                    .option("path", out_dir))
-            else:
-                writer = (
-                    stream_df.writeStream.format("memory")
-                    .queryName(query_name))
-            q = (
-                writer.outputMode(output_mode)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if spill_state:
-            if old_provider:
-                sess.conf.set(_STATE_PROVIDER_KEY, old_provider)
-            else:
-                sess.conf.unset(_STATE_PROVIDER_KEY)
+    with sized_shuffle_partitions(sess, n_partitions=state_partitions), \
+            scoped_conf(sess, replay_confs(sess, checkpoint_dir, spill_state)):
+        if to_parquet:
+            out_dir = scratch_dir("kmr_stream_out_")
+            _scratch_until_exit(out_dir)
+            writer = (
+                stream_df.writeStream.format("parquet")
+                .option("path", out_dir))
+        else:
+            writer = (
+                stream_df.writeStream.format("memory")
+                .queryName(query_name))
+        q = (
+            writer.outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     if to_parquet:
         return sess.read.parquet(out_dir)
     return sess.sql(f"SELECT * FROM {query_name}")

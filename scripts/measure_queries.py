@@ -11,6 +11,9 @@ Timing mimics bench.py run_once exactly (clearCache + System.gc +
 0.2s settle before each sample) so numbers are comparable to
 bench_detail.json; each query gets one untimed warmup rep first.
 Plans are captured from the same DataFrame the timed run executes.
+Next to its times each query reports ``spawns``: the processes the
+Spark JVM started per timed call, by executable, counted with
+``jvm_spawns.process_spawns`` (a JFR recording of ``jdk.ProcessStart``).
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ def main() -> None:
 
     from kmr_spark.session import get_spark
     import __spark_entry__ as entrymod
+    from jvm_spawns import process_spawns
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("kmr_spark_measure")
@@ -77,9 +81,12 @@ def main() -> None:
                 f.write(buf.getvalue())
             spark.catalog.clearCache()
         run_once(name)  # warmup
-        times = [run_once(name) for _ in range(args.reps)]
+        with process_spawns(spark) as spawns:
+            times = [run_once(name) for _ in range(args.reps)]
         out[name] = {"times": times, "min": min(times),
-                     "mean": round(sum(times) / len(times), 3)}
+                     "mean": round(sum(times) / len(times), 3),
+                     "spawns": {cmd: round(n / args.reps, 1)
+                                for cmd, n in spawns.most_common()}}
         print(json.dumps({name: out[name]}), flush=True)
         spark.sparkContext.setJobDescription(None)
     print(json.dumps({"sf_dir": sf_dir, "queries": out}))

@@ -2,9 +2,18 @@
 multimodal plumbing."""
 
 import os
+import sys
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
+
+from conftest import assert_matches_oracle
+
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
+
+from jvm_spawns import process_spawns
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -86,6 +95,73 @@ def test_streaming_parquet_sink_exactly_once(spark, tmp_path):
     again = run_available_now_to_parquet(
         streaming_dedup(stream_events(spark, SF_SMALL)), out, ck)
     assert again.count() == 1000
+
+
+def _replay_conf_keys():
+    from kmr_spark.streaming.windows import (_CHECKPOINT_MANAGER_KEY,
+                                             _STATE_PROVIDER_KEY)
+    return _CHECKPOINT_MANAGER_KEY, _STATE_PROVIDER_KEY
+
+
+def test_replay_forks_no_readlink_and_restores_manager_conf(spark, tmp_path):
+    """A replay's local checkpoint goes through the FileSystem-based
+    checkpoint manager: Hadoop's local FileContext rename forks a
+    ``readlink`` per path, 112 of them for this replay on 4 slots. The
+    manager conf is scoped to the replay, also when the replay raises."""
+    from kmr_spark.plans.analytics import events_tumbling_streamed
+    from kmr_spark.session import scoped_conf
+    from kmr_spark.streaming.windows import (merge_stream_to_state,
+                                             stream_events)
+
+    key, _ = _replay_conf_keys()
+    before = spark.conf.get(key, None)
+    with process_spawns(spark) as spawns:
+        assert events_tumbling_streamed(spark, SF_SMALL).count() > 0
+    assert spawns["readlink"] == 0, spawns
+    assert spark.conf.get(key, None) == before
+
+    fc = ("org.apache.spark.sql.execution.streaming.checkpointing."
+          "FileContextBasedCheckpointFileManager")
+    state = tmp_path / "state"
+    (state / "v99").mkdir(parents=True)  # fails the first batch
+    with scoped_conf(spark, {key: fc}):
+        with pytest.raises(Exception, match="newer than batch"):
+            merge_stream_to_state(stream_events(spark, SF_SMALL),
+                                  str(state), str(tmp_path / "ck"))
+        assert spark.conf.get(key, None) == fc
+
+
+def test_replay_confs_keep_default_manager_off_local_fs(spark):
+    from kmr_spark.streaming.windows import replay_confs
+
+    key, provider = _replay_conf_keys()
+    assert key in replay_confs(spark, "/dev/shm/ck")
+    assert key in replay_confs(spark, "file:///tmp/ck")
+    assert replay_confs(spark, "hdfs://nn:8020/ck") == {}
+    assert set(replay_confs(spark, "s3a://b/ck", spill_state=True)) == {provider}
+
+
+def test_dedup_streamed_spill_path_matches_oracle(spark, monkeypatch):
+    """``run_available_now(..., spill_state=True)``: the RocksDB state
+    store, parquet staging and the FileSystem-based checkpoint manager
+    together, on every input (spill threshold 1 byte)."""
+    from kmr_spark.plans.analytics import (EVENTS_DEDUP_STREAMED_SQL,
+                                           events_dedup_streamed)
+    from kmr_spark.streaming import windows
+
+    monkeypatch.setattr(windows, "STATE_SPILL_BYTES", 1)
+    assert windows.spill_state_store(spark, SF_SMALL)
+    keys = _replay_conf_keys()
+    before = [spark.conf.get(k, None) for k in keys]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM read_parquet("
+                f"'{os.path.join(SF_SMALL, 'events.parquet')}')")
+    try:
+        assert_matches_oracle(spark, con, events_dedup_streamed,
+                              EVENTS_DEDUP_STREAMED_SQL, sf_dir=SF_SMALL)
+    finally:
+        con.close()
+    assert [spark.conf.get(k, None) for k in keys] == before
 
 
 def test_enumerate_and_text_lines(spark, tmp_path):
